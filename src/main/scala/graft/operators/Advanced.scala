@@ -438,7 +438,7 @@ object Advanced {
       // the first exchange is the term window. Replaces the r5
       // materialize-tf (localCheckpoint) + broadcast-df plan that ran
       // 8.3x DuckDB on identical SQL (1.26s vs 0.15s at sf0.1).
-      // Measured (Tune, sf0.1 min-of-2): r5 plan 1.02-1.10s; window
+      // Measured (sf0.1 min-of-2): r5 plan 1.02-1.10s; window
       // plan with repartition 0.73-0.77s; this form 0.46s.
       val tf = Tables.documents(s, d)
         .select(col("doc_id"),

@@ -66,9 +66,8 @@ object Corpus {
     * rounds ∝ component length: on a planted half-corpus component
     * (62.5k docs as chained 20-doc cliques, 1.8M pairs, diameter
     * ~3.1k) the shortcut converges in 12 rounds / 23.5s while plain
-    * propagation was still running at its 40-round abort cap —
-    * ScaleSmoke ccskew, PLANS.md r17 (the r16 VERDICT's skew
-    * bracket). The shortcut join is
+    * propagation was still running at a 40-round abort cap —
+    * ScaleSmoke ccskew, PLANS.md r17. The shortcut join is
     * exact, not approximate: label values are vertex ids of the same
     * component (propagation moves them only along edges, shortcutting
     * only through label cells), every label value exists as a vertex
@@ -84,19 +83,7 @@ object Corpus {
     * independent of round count. The FINAL labels checkpoint backs the
     * returned frame and is released by Lifecycle.release sweep. */
   private[graft] def connectedComponents(und: DataFrame): DataFrame = {
-    // measurement-only knobs (ScaleSmoke ccskew A/B): `off` reverts to
-    // plain hash-min propagation — the counterfactual the shortcut is
-    // measured against; maxRounds (0 = unlimited) aborts a run that
-    // would otherwise iterate ∝ diameter, so the plain arm can be
-    // timed on the chain adversary without running to completion.
-    // Production never sets either.
     val sess = und.sparkSession
-    val shortcut = sess.conf.get("spark.graft.cc.shortcut", "on") != "off"
-    // measurement-only knob: a malformed value must degrade to the
-    // default (unlimited), never throw from inside every CC consumer
-    // (r17 ADVICE — matches the listing-degradation convention).
-    val maxRounds = scala.util.Try(
-      sess.conf.get("spark.graft.cc.maxRounds", "0").toInt).getOrElse(0)
     // Rounds executed per materialize-and-probe cycle. >1 fuses that
     // many propagate+shortcut rounds into ONE checkpoint-and-probe
     // barrier; monotonicity keeps the probe exact (sum unchanged across
@@ -247,7 +234,7 @@ object Corpus {
     var prevSum = labelSum(labels)
     var converged = false
     var rounds = 0
-    // ONE propagate + (optional) shortcut round as a lazy plan — the
+    // ONE propagate + shortcut round as a lazy plan — the
     // loop below fuses `roundsPerSync` of these per materialization.
     def round(lbl0: DataFrame): DataFrame = {
       // explicit non-null (true by construction) for the same
@@ -263,20 +250,13 @@ object Corpus {
       // agg subplan appears on both sides but its inner exchange is
       // deduped by ReuseExchange — the round pays the two join
       // exchanges, and buys rounds ∝ log diameter.
-      if (!shortcut) agg
-      else {
-        val lookup0 = agg.select(col("v").as("lv"), col("label").as("label2"))
-        val lookup = if (staticLoop) lookup0.hint("SHUFFLE_HASH") else lookup0
-        agg.join(lookup, col("label") === col("lv"))
-          .select(col("v"), col("label2").as("label"))
-      }
+      val lookup0 = agg.select(col("v").as("lv"), col("label").as("label2"))
+      val lookup = if (staticLoop) lookup0.hint("SHUFFLE_HASH") else lookup0
+      agg.join(lookup, col("label") === col("lv"))
+        .select(col("v"), col("label2").as("label"))
     }
     while (!converged) {
       rounds += roundsPerSync
-      if (maxRounds > 0 && rounds > maxRounds)
-        throw new IllegalStateException(
-          s"connectedComponents aborted: exceeded maxRounds=$maxRounds " +
-            "(spark.graft.cc.maxRounds is a measurement knob)")
       val stepped = (1 until roundsPerSync).foldLeft(round(labels))(
         (lbl, _) => round(lbl))
       // cut lineage (iterative joins stack plans); lazy — the probe
@@ -325,8 +305,8 @@ object Corpus {
       // Edges from the PERSISTED MinHash+LSH pair index (t07's product),
       // not the exact inverted index (t06): the pair sets are identical
       // (LSH candidates are exactly verified; equality with t06 is
-      // pinned in OperatorsSpec and re-proven at 5k/20k/60k docs in
-      // ScaleSmoke), and reading the corpus-fingerprinted index means
+      // pinned in OperatorsSpec and re-proven at 5k/20k/60k docs by
+      // ScaleSmoke growth), and reading the corpus-fingerprinted index means
       // the LSH pipeline runs ONCE per corpus across t07/t11/t19 —
       // exactly the producer/consumer split a production CC stage has.
       // The oracle still recomputes edges exactly.
@@ -428,8 +408,8 @@ object Corpus {
     * 100 TB — runs only over the delta's cluster neighborhood (∝ the
     * daily slice and its duplicates, not the corpus); everything else
     * is one label-table anti-join splice. Measured honestly at 125k
-    * docs (ScaleSmoke ccdelta, re-run r17 with the pointer-jump CC and
-    * the neighborhood-priced delta): 1.6× over re-pair+full-CC on the
+    * docs (PLANS.md r17, with the pointer-jump CC and the
+    * neighborhood-priced delta): 1.6× over re-pair+full-CC on the
     * DENSE replica corpus (1.3M pairs; was 1.2× in r16) and a LOSS
     * (0.7×, was 0.5×) on the sparse one, where full re-pairing from
     * warm bands is trivially cheap — the step pays for itself in

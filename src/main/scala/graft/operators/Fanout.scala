@@ -23,7 +23,7 @@ import org.apache.spark.sql.DataFrame
   * of scan input per task, COMPUTE-priced like [[LoopExec.partitionsFor]]'s
   * divisor: these kernels expand input text into shingles/tokens at
   * 10-50x, so 200 KB in is a few MB of kernel output and tens of ms of
-  * work per task. Tune width A/B over 12 kernel entries at sf0.1, r22:
+  * work per task. Width A/B over 12 kernel entries at sf0.1, r22:
   * legacy core-count width 11.21s, 16KB 10.22s, 64KB 8.05s, 150KB
   * 7.40s, 300KB 8.15s, 1MB 10.56s — a flat valley at 128-300KB with
   * steep walls at both extremes; a refining pass placed 200KB at the

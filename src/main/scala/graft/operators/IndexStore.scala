@@ -26,10 +26,6 @@ package graft.operators
   * SourcesStreaming.RewriteLayoutV, BandIndex) or a warm /tmp serves
   * the old code's output.
   */
-// private[graft] (not [operators]): graft.tools measurement mains read
-// broadcastCapBytes — the ONE cap parser — rather than re-parsing the
-// conf (the r18 review found exactly that drifted duplicate in
-// ScaleSmoke, throwing on the standard "-1" disable form)
 private[graft] object IndexStore {
 
   /** Broadcast `df` only if its MEASURED in-memory size estimate fits
@@ -38,10 +34,10 @@ private[graft] object IndexStore {
     * estimates from COMPRESSED file size, which under-states the
     * broadcast hash relation (string-heavy sets decompress 5-10x, plus
     * row + map overhead) — measured failure "Not enough memory to build
-    * and broadcast" at 125k docs under a starved heap (SpillSmoke r13)
-    * on a set whose parquet stats looked broadcastable. The estimate
-    * here is payload bytes + 32 B/row UnsafeRow overhead, x2 for the
-    * hash relation layout. Costs one tiny aggregate over `df` — callers
+    * and broadcast" at 125k docs under a starved heap, on a set whose
+    * parquet stats looked broadcastable. The estimate here is payload
+    * bytes + 32 B/row UnsafeRow overhead, x2 for the hash relation
+    * layout. Costs one tiny aggregate over `df` — callers
     * pass already-persisted or checkpointed frames, so the scan is
     * cheap. Fallbacks should ACTIVELY suppress a stats-based planner
     * broadcast (e.g. `_.hint("SHUFFLE_HASH")`), not just omit the hint.
@@ -88,36 +84,34 @@ private[graft] object IndexStore {
   }
 
   /** The THREE-TIER join-shape pin for a frame whose in-memory size the
-    * caller MEASURED (never planner stats — the SpillSmoke r13 class:
-    * compressed-file stats under-state string-heavy hash relations
-    * 5-10×, and stacked selectivity estimates broadcast corpus-sized
-    * frames). Returns the pinned frame plus its tier label:
+    * caller MEASURED (never planner stats: compressed-file stats
+    * under-state string-heavy hash relations 5-10×, and stacked
+    * selectivity estimates broadcast corpus-sized frames — an OOM at a
+    * starved heap). Returns the pinned frame:
     *
     *  - `est < 0` (caller cannot bound the frame): sort-merge, the only
-    *    unconditionally spill-safe shape — "merge(unpriced)";
+    *    unconditionally spill-safe shape;
     *  - `est ≤` the session broadcast cap: explicit broadcast;
     *  - past the cap, SHUFFLE_HASH only while the per-partition build
     *    PROVABLY fits (SHJ builds cannot spill — a build that outgrows
     *    its task's execution-memory share is a hard `Can't acquire ...
-    *    hash relation` failure, measured in RingSpill r16 at a 2 GB
-    *    heap): double-gated with Spark's own SHJ-eligibility calculus
-    *    (cap × partitions) AND the per-task input (×4 hash-map
-    *    overhead, AQE-coalescing advisory floor included — a coalesced
-    *    task reads up to the advisory target, r16 ADVICE) fitting half
-    *    a task's execution share;
+    *    hash relation` failure, measured at a 2 GB heap): double-gated
+    *    with Spark's own SHJ-eligibility calculus (cap × partitions) AND
+    *    the per-task input (×4 hash-map overhead, AQE-coalescing
+    *    advisory floor included — a coalesced task reads up to the
+    *    advisory target) fitting half a task's execution share;
     *  - past either bound: sort-merge.
     *
-    * Factored out of [[TextDedup.verifyJaccardOf]] (r20) so the media
-    * family's corpus-proportional 64-bit hash matching rides the SAME
-    * calculus instead of a drifting copy — the cap-parser drift class
-    * the r18 review closed, one level up. */
+    * Shared by [[TextDedup.verifyJaccardOf]] and the media family's
+    * corpus-proportional 64-bit hash matching, so neither drifts onto a
+    * private copy of the calculus. */
   def tieredHint(s: org.apache.spark.sql.SparkSession,
       df: org.apache.spark.sql.DataFrame, estBytes: Long)
-      : (org.apache.spark.sql.DataFrame, String) = {
+      : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.broadcast
-    if (estBytes < 0) return (df.hint("MERGE"), "merge(unpriced)")
+    if (estBytes < 0) return df.hint("MERGE")
     val cap = broadcastCapBytes(s)
-    if (cap > 0 && estBytes <= cap) return (broadcast(df), "broadcast")
+    if (cap > 0 && estBytes <= cap) return broadcast(df)
     val parts = s.conf.get("spark.sql.shuffle.partitions", "200").toInt
     // executor memory × fraction / slots ≈ one task's execution share
     // (local mode: the driver JVM heap; cluster mode: the executor conf
@@ -154,8 +148,8 @@ private[graft] object IndexStore {
       else estBytes / math.max(parts, 1)
     val perPartBuild = perTaskInput * buildOverhead
     if (cap > 0 && estBytes <= cap * parts && perPartBuild <= taskShare / 2)
-      (df.hint("SHUFFLE_HASH"), "shuffle_hash")
-    else (df.hint("MERGE"), "merge")
+      df.hint("SHUFFLE_HASH")
+    else df.hint("MERGE")
   }
 
   /** Fingerprint of a corpus table: name, length and mtime of every part
@@ -298,36 +292,26 @@ private[graft] object IndexStore {
 
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  // an in-JVM delete of a published dir (RetractionSpec's wipeAll
-  // re-publish, ScaleSmoke's mediamega delete+rebuild) must drop the
-  // pinned schema for it and everything under it, or a rebuilt dir with
-  // a changed layout would silently serve the stale schema (r20 ADVICE)
+  // an in-JVM delete of a published dir must drop the pinned schema for
+  // it and everything under it, or a dir rebuilt with a changed layout
+  // would silently serve the stale schema
   graft.Lifecycle.onDelete { p =>
     schemaCache.keySet.removeIf(k => k == p || k.startsWith(p + "/")); ()
   }
 
   /** Read a PUBLISHED (publish-once, marker-gated, immutable) index dir
     * with its schema pinned from a per-JVM cache — skips the footer-read
-    * schema inference every plan construction over the dir pays
-    * (S13Profile r19 attributed 0.27–0.38 s of each warm probe plan to
-    * construction + footer reads; the r19 slate-#5 experiment, measured
-    * in PLANS r20). Sound ONLY for publish-once dirs: content under a
-    * published name never changes (the ensure() rename contract), and a
-    * regenerated corpus or bumped layout changes the DIR NAME, never the
-    * content under an existing one. The first read of a dir infers once
-    * to seed the cache; `spark.graft.schemaPin=off` reverts to bare
-    * reads for the A/B. */
+    * schema inference every plan construction over the dir pays (0.27–
+    * 0.38 s of each warm probe plan at sf0.1; the A/B is in PLANS r20).
+    * Sound ONLY for publish-once dirs: content under a published name
+    * never changes (the ensure() rename contract), and a regenerated
+    * corpus or bumped layout changes the DIR NAME, never the content
+    * under an existing one. The first read of a dir infers once to seed
+    * the cache. */
   def readPublished(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    // A/B switch: conf, with an env fallback that survives sbt's forked
-    // runs (a -D to sbt never reaches the forked main's JVM)
-    val mode = s.conf.get("spark.graft.schemaPin",
-      sys.env.getOrElse("SPARK_GRAFT_SCHEMA_PIN", "on"))
-    if (mode == "off") s.read.parquet(dir)
-    else {
-      val schema = schemaCache.computeIfAbsent(dir, d => s.read.parquet(d).schema)
-      s.read.schema(schema).parquet(dir)
-    }
+    val schema = schemaCache.computeIfAbsent(dir, d => s.read.parquet(d).schema)
+    s.read.schema(schema).parquet(dir)
   }
 
   /** Ensure the index at `dirPath` is published (its `marker` file

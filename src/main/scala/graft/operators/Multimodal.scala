@@ -1085,14 +1085,9 @@ object Multimodal {
     /** 8 bands × 8 bits: each band has 256 values, so band buckets hold
       * ~|H|/256 hashes and the candidate volume is
       * bands × Σ bucket² ≈ |H|²/32 under uniform occupancy — CORPUS-
-      * proportional (|H| ~ docs at this width), priced live by the
-      * mediamega row, never assumed broadcastable. */
+      * proportional (|H| ~ docs at this width), priced from measured
+      * rows, never assumed broadcastable. */
     private[graft] val HammingBands64 = 8
-
-    /** Tier labels the LAST matcher plan construction pinned (band
-      * self-join b-side, keeper map) — measurement tripwire only
-      * (ScaleSmoke mediamega), the lastVerifyTier convention. */
-    @volatile private[graft] var lastTier: String = "unset"
 
     /** Per-hash frame with the two 32-bit halves as longs — tolerance is
       * defined at full 64-cell resolution; short hashes (pv NULL twin:
@@ -1102,10 +1097,9 @@ object Multimodal {
         .withColumn("hi", conv(substring(col("phash"), 1, 32), 2, 10).cast("long"))
         .withColumn("lo", conv(substring(col("phash"), 33, 32), 2, 10).cast("long"))
 
-    /** The banded candidate PAIRS before distance verification — split
-      * out of [[nearDupKeepers]] so the mediamega pricing row counts
-      * exactly the candidate volume the matcher pays (a re-derived copy
-      * would drift on the band geometry). `estRows` is the caller's
+    /** The banded candidate PAIRS before distance verification — the
+      * ONE band geometry [[nearDupKeepers]] and [[chainKeepers]] share
+      * (a re-derived copy would drift). `estRows` is the caller's
       * measured corpus-row bound (-1 = unpriced → spill-safe merge). */
     private[graft] def bandedCandidates(s: org.apache.spark.sql.SparkSession,
         perHash: DataFrame, estRows: Long): DataFrame = {
@@ -1122,11 +1116,10 @@ object Multimodal {
         if (estRows < 0) -1L
         else IndexStore.estimateBytes(estRows * HammingBands64,
           estRows * HammingBands64 * 112L)
-      val (bSide, tierB) = IndexStore.tieredHint(s,
+      val bSide = IndexStore.tieredHint(s,
         banded.select(col("phash").as("b_phash"), col("hi").as("b_hi"),
           col("lo").as("b_lo"), col("min_id").as("b_min"),
           col("band").as("b_band"), col("bv").as("b_bv")), estBanded)
-      lastTier = s"band=$tierB"
       banded.join(bSide,
         col("band") === col("b_band") && col("bv") === col("b_bv") &&
           col("phash") =!= col("b_phash"))
@@ -1160,8 +1153,7 @@ object Multimodal {
       val estNb =
         if (estRows < 0) -1L
         else IndexStore.estimateBytes(estRows, estRows * 80L)
-      val (nbSide, tierN) = IndexStore.tieredHint(s, nb, estNb)
-      lastTier = s"$lastTier,keeper=$tierN"
+      val nbSide = IndexStore.tieredHint(s, nb, estNb)
       perHash.join(nbSide, Seq("phash"), "left")
         .select(col("phash"),
           least(col("min_id"), coalesce(col("nb_min"), col("min_id")))
@@ -1204,9 +1196,8 @@ object Multimodal {
       val estCc =
         if (estRows < 0) -1L
         else IndexStore.estimateBytes(estRows, estRows * 16L)
-      val (ccSide, tierC) = IndexStore.tieredHint(s,
+      val ccSide = IndexStore.tieredHint(s,
         cc.select(col("v"), col("label")), estCc)
-      lastTier = s"$lastTier,cc=$tierC"
       val full = perHash.filter(length(col("phash")) === Phash64Cells)
       full.join(ccSide, full("min_id") === col("v"), "left")
         .select(col("phash"),
@@ -1555,8 +1546,9 @@ object Multimodal {
     * breaks the hash.
     *
     * Scale: one corpus-proportional hash shuffle; banded candidates
-    * ~|H|²/32 int-xor comparisons (priced live at 1.25M docs by the
-    * mediamega row); every matcher join tier-gated on measured bytes
+    * ~|H|²/32 int-xor comparisons (measured at 1.25M docs, PLANS.md
+    * Round-20 (7));
+    * every matcher join tier-gated on measured bytes
     * ([[IndexStore.tieredHint]]). */
   val mm10 = QueryDef(
     "mm10_phash64_near_dedup",
@@ -1567,7 +1559,7 @@ object Multimodal {
       val estK =
         if (estRows < 0) -1L
         else IndexStore.estimateBytes(estRows, estRows * 80L)
-      val (kSide, _) = IndexStore.tieredHint(s, keepers, estK)
+      val kSide = IndexStore.tieredHint(s, keepers, estK)
       state.join(kSide, Seq("phash"))
         .select(col("id"), col("phash"), col("keep_id"),
           (col("id") =!= col("keep_id")).as("is_dup"))
@@ -1652,8 +1644,8 @@ object Multimodal {
     * closure over the TRUE all-pairs radius-4 graph keyed by group min
     * ids, min label per vertex, no second aggregate.
     *
-    * Scale: edges from the tier-gated banded matcher (priced at 1.25M
-    * docs in the mediamega row); CC vertices ≤ distinct hashes
+    * Scale: edges from the tier-gated banded matcher (measured at 1.25M
+    * docs, PLANS.md Round-20 (7)); CC vertices ≤ distinct hashes
     * (corpus-proportional at this width — the label join rides the
     * tier gate too, never an assumed broadcast); rounds ∝ log chain
     * length. */
@@ -1666,7 +1658,7 @@ object Multimodal {
       val estK =
         if (estRows < 0) -1L
         else IndexStore.estimateBytes(estRows, estRows * 80L)
-      val (kSide, _) = IndexStore.tieredHint(s, keepers, estK)
+      val kSide = IndexStore.tieredHint(s, keepers, estK)
       state.join(kSide, Seq("phash"))
         .select(col("id"), col("phash"), col("keep_id"),
           (col("id") =!= col("keep_id")).as("is_dup"))

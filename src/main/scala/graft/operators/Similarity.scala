@@ -188,9 +188,6 @@ object Similarity {
       }.reduce(_ + _)
     }: _*)
 
-  private def dedupBuckets(emb: Column): Column =
-    signBuckets(emb, dedupPlanes, DedupTables, DedupPlanes)
-
   /** Candidate-generation twin of s01 with the same output contract
     * (id1 < id2, cos >= threshold, one row per pair) but pairs produced
     * by the multi-table LSH bucket join — the t07 MinHash pattern
@@ -211,9 +208,9 @@ object Similarity {
     * deployment turns with its duplicate threshold: the gate's
     * cos >= 0.38 on near-random vectors needs T=32 coarse 2-plane
     * tables for exhaustive recall (4 buckets/table => candidates ~
-    * T/4 x all-pairs: recall-exhaustive but NOT selective, measured in
-    * ScaleSmoke), while a realistic dedup cut (cos >= 0.9, theta <=
-    * 26deg) tolerates 8-plane tables whose 256 buckets prune candidates
+    * T/4 x all-pairs: recall-exhaustive but NOT selective, measured on
+    * replicated corpora, PLANS.md), while a realistic dedup cut
+    * (cos >= 0.9, theta <= 26deg) tolerates 8-plane tables whose 256 buckets prune candidates
     * by orders of magnitude at the same miss bound. */
   def lshPairsTuned(s: SparkSession, d: String, threshold: Double,
                     planes: Array[Array[Double]],
@@ -1184,8 +1181,7 @@ object Similarity {
 
     /** Growth step: assign ONLY the new slice against the frozen base
       * centroids and publish as an immutable delta segment. Touches no
-      * base rows — the measured cost is ∝ |new slice| (ScaleSmoke's
-      * `inc` section). */
+      * base rows — the measured cost is ∝ |new slice| (PLANS.md). */
     def ensureDelta(s: SparkSession, d: String): String = {
       val bd = ensureBase(s, d)
       IndexStore.ensure(deltaDirFor(d), "assigned/_SUCCESS") { tmp =>
@@ -1575,7 +1571,7 @@ object Similarity {
       // separation (see driftRatioFromAssigned's doc), so an arm can
       // never flip.
       // both monitor arms persist their (vec_id, sqdist) evidence AND
-      // their decision VALUE (r19: S13Profile put s13's warm cost at
+      // their decision VALUE (a profile put s13's warm cost at
       // 1.10s quiet monitor + 0.38s drift monitor — Spark jobs
       // re-deriving, every serve, a scalar that is a pure function of
       // published state. A deployment's drift monitor is a scheduled
@@ -1849,10 +1845,9 @@ object Similarity {
   private def ivfProbe(assignedRaw: DataFrame, centersDf: DataFrame): DataFrame =
     ivfProbeN(assignedRaw, centersDf, NumQueries)
 
-  /** [[ivfProbe]] with a caller-sized query set — the ScaleSmoke stress
-    * entry (the catalog's 10 fixed queries under-drive the probe's
-    * exchanges at depth; skew behavior only shows under a realistic
-    * query load). */
+  /** [[ivfProbe]] with a caller-sized query set (the catalog's 10 fixed
+    * queries under-drive the probe's exchanges at depth; skew behavior
+    * only shows under a realistic query load). */
   private[graft] def ivfProbeN(assignedRaw: DataFrame, centersDf: DataFrame,
       numQueries: Int): DataFrame =
     ivfProbeOn(assignedRaw, centersDf, _.filter(col("vec_id") < numQueries),
@@ -1860,10 +1855,8 @@ object Similarity {
 
   /** The (query_id, qe, qn, cell) nprobe cell cut for an explicit query
     * selector over the normed index view — the ONE scoring/ranking body
-    * every probe consumer shares (the gate probes, the ScaleSmoke drift
-    * instrument, HotCellDiag's fan-out accounting), so a measurement
-    * can never silently run a different plan than the shipped one (r15
-    * review finding).
+    * every probe consumer shares, so a measurement can never silently
+    * run a different plan than the shipped one.
     *
     * Cells ranked by the SAME squared-L2 score the index assigns with
     * (‖c‖² − 2·q·c ascending), not raw inner product: assignment is an
@@ -1915,7 +1908,7 @@ object Similarity {
     // the probed side is ≤ queries × nprobe rows BY CONSTRUCTION — tiny
     // at any corpus scale — but its stats pass through two windows and
     // a crossJoin, so the planner cannot see that and (measured at 384k
-    // vectors, ScaleSmoke hotcell) plans a shuffle join on cell instead:
+    // vectors on a hot-cell corpus) plans a shuffle join on cell instead:
     // every hot-cell row lands on ONE task (maxTask 15.3 s vs p50
     // 1.2 s). The pin is SIZE-GATED, not unconditional (r15 ADVICE):
     // each probed row carries the full query embedding, so a service
@@ -2030,24 +2023,6 @@ object Similarity {
     * needs — without it a year of nightly deltas is 365 small segments
     * and every probe pays the scan tail; with the ratio gate each fold
     * is ∝ index bytes and the segment count stays O(1). */
-  /** The maintained-index probe at an arbitrary query-set size — what
-    * ScaleSmoke's hot-cell stress drives (see [[ivfProbeN]]). */
-  private[graft] def probeTopK(s: SparkSession, d: String, numQueries: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    val assigned = IvfIncIndex.maintained(s, d)
-    val centersDf = IndexStore.readPublished(s, s"${IvfIncIndex.baseDirFor(d)}/centroids")
-    ivfProbeN(assigned, centersDf, numQueries)
-  }
-
-  /** [[probeTopK]] over an explicit published index dir (e.g. the
-    * hot-cell-refined one) — same probe plan, different index. */
-  private[graft] def probeTopKOver(s: SparkSession, indexDir: String,
-      numQueries: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
-    ivfProbeN(IndexStore.readPublished(s, s"$indexDir/assigned"),
-      IndexStore.readPublished(s, s"$indexDir/centroids"), numQueries)
-  }
-
   val s10 = QueryDef(
     "s10_ann_compacted_probe",
     (s, d) => {

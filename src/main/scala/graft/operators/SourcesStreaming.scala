@@ -1226,7 +1226,7 @@ object SourcesStreaming {
         val estK =
           if (estRows < 0) -1L
           else IndexStore.estimateBytes(estRows, estRows * 80L)
-        val (kSide, _) = IndexStore.tieredHint(s2, keepers, estK)
+        val kSide = IndexStore.tieredHint(s2, keepers, estK)
         val arriving = s2.readStream
           .schema(DocStreamSchema)
           .option("pathGlobFilter", "documents.parquet")

@@ -120,12 +120,6 @@ object TextDedup {
     * [[dedupNearPairs]] façade. Joins the per-doc shingle sets (one row
     * per doc — broadcastable at moderate doc counts; at extreme scale
     * replace with a semi-join back into the index). */
-  /** The tier the LAST [[verifyJaccardOf]] plan construction chose —
-    * a measurement-only tripwire (ScaleSmoke `mega`: the r17 VERDICT
-    * noted the sort-merge tier had never been observed firing in
-    * anger). Plan-construction-time, like [[Corpus.lastRounds]]. */
-  @volatile private[graft] var lastVerifyTier: String = "unset"
-
   private[graft] def verifyJaccardOf(src: DataFrame, cand: DataFrame,
       estSetsBytes: Long = -1L): DataFrame = {
     val s = src.sparkSession
@@ -142,48 +136,21 @@ object TextDedup {
     // sets side is CORPUS-SIZED in the worst case (one shingle-set row
     // per doc, text-derived arrays), and a doc_id-modulo filter
     // upstream (the ring's presentAt) stacks selectivity estimates
-    // until Catalyst broadcasts it — OBSERVED in night 0's plan at
+    // until Catalyst broadcasts it — observed in night 0's plan at
     // 125k docs: BOTH sets sides planned as 100k-row text-payload
-    // broadcast relations (r15, tools.Night0Diag). That is the
-    // SpillSmoke r13 class — at a starved heap or real scale the build
+    // broadcast relations. At a starved heap or real scale that build
     // is an OOM, not a slowdown. The pin is SIZE-GATED like every other
-    // graft broadcast (r15 slate #4): a caller that can price the sets
-    // side from the corpus's MEASURED bytes passes `estSetsBytes`, and
-    // below the session broadcast cap the join is an explicit
-    // broadcast (the r16 HintAB A/B: unconditional SHUFFLE_HASH cost
+    // graft broadcast ([[IndexStore.tieredHint]]): a caller that can
+    // price the sets side from the corpus's MEASURED bytes passes
+    // `estSetsBytes`, and below the session broadcast cap the join is
+    // an explicit broadcast (an unconditional SHUFFLE_HASH measured
     // t34 1.34 s vs 0.97 s, c04 1.48 s vs 1.08 s at sf0.1, interleaved
     // same-window); past the cap, SHUFFLE_HASH only while the build
-    // PROVABLY fits (SHJ builds cannot spill — the RingSpill 2 GB
-    // failure, see below); past that bound — or when the caller cannot
-    // bound the frame at all (the façades' -1) — sort-merge, the only
+    // PROVABLY fits (SHJ builds cannot spill — a 2 GB heap measured the
+    // hard failure); past that bound — or when the caller cannot bound
+    // the frame at all (the façades' -1) — sort-merge, the only
     // unconditionally spill-safe shape. Never a stats gamble.
-    // conf=off ONLY for the RingSpill/Night0Diag counterfactual
-    // (reverts to bare planner stats so the starved-heap A/B can
-    // measure the broadcast plan this gate exists to suppress).
-    val mode = s.conf.get("spark.graft.verifyjoin.hint", "auto")
-    // every branch records its tier (forced hints included) so a
-    // measurement reading lastVerifyTier after a plan that DID build a
-    // verify join never sees a prior plan's value (r18 review; plans
-    // that build no verify join are the reader's job to reset — see
-    // ScaleSmoke soak/mega)
-    def pin(df: DataFrame): DataFrame = mode match {
-      case "off"          => lastVerifyTier = "off(hint)"; df
-      case "shuffle_hash" => lastVerifyTier = "shuffle_hash(hint)"; df.hint("SHUFFLE_HASH")
-      case "merge"        => lastVerifyTier = "merge(hint)"; df.hint("MERGE")
-      case _ =>
-        // the ONE tier calculus ([[IndexStore.tieredHint]], factored out
-        // r20 so the media family's 64-bit matcher rides the same gate):
-        // broadcast under the cap; SHUFFLE_HASH double-gated (SHJ builds
-        // CANNOT spill — the RingSpill r16 2 GB hard failure — so the
-        // per-partition build, with hash-map overhead and the AQE
-        // advisory floor, must PROVABLY fit half a task's execution
-        // share); past either bound, sort-merge — the only
-        // unconditionally memory-safe shape, and the arm that survived
-        // every RingSpill heap above the global scan floor.
-        val (pinned, tier) = IndexStore.tieredHint(s, df, estSetsBytes)
-        lastVerifyTier = tier
-        pinned
-    }
+    def pin(df: DataFrame): DataFrame = IndexStore.tieredHint(s, df, estSetsBytes)
     val s1 = pin(sets.select(col("doc_id").as("doc1"), col("sh").as("sh1")))
     val s2 = pin(sets.select(col("doc_id").as("doc2"), col("sh").as("sh2")))
     cand.join(s1, "doc1").join(s2, "doc2")
@@ -337,7 +304,7 @@ object TextDedup {
     * 1.55s inline-profile vs 1.06s persisted vs 1.01s ungated direct at
     * sf0.1, min-of-3). [[jaccardPairsHatched]] keeps the inline-profile
     * form; [[jaccardPairsDirect]] survives as the identity-pin reference
-    * (OperatorsSpec) and ScaleSmoke's SKEW comparison row. */
+    * (OperatorsSpec). */
   val t06 = QueryDef(
     "t06_jaccard_pairs",
     (s, d) => {
@@ -369,8 +336,8 @@ object TextDedup {
       .hint("SHUFFLE_HASH")
     // SHUFFLE_HASH: the join output feeds a hash aggregate, so the
     // sort-merge join's per-partition sorts are pure waste; hashing
-    // the build side instead is 0.95s -> 0.69s at sf0.1 (Tune,
-    // min-of-2). MEMORY FLOOR, measured (SpillSmoke r13): the build
+    // the build side instead is 0.95s -> 0.69s at sf0.1 (min-of-2).
+    // MEMORY FLOOR, measured on a starved heap: the build
     // map is per-partition and NOT spillable — per-task memory must
     // cover occurrences/shufflePartitions, or the stage dies with
     // "not enough memory to build hash map" (observed at 125k docs,
@@ -445,8 +412,9 @@ object TextDedup {
 
   /** t06's default plan: the inverted-index self-join with a stats-gated
     * hot-shingle escape hatch. EXACT (result-identical to
-    * [[jaccardPairsDirect]] — pinned in OperatorsSpec on a normal corpus
-    * and a skew-stress corpus in ScaleSmoke), but skew-immune.
+    * [[jaccardPairsDirect]] — pinned in OperatorsSpec; a planted hot
+    * shingle at 12x sf0.1 gave identical pair counts, PLANS.md), but
+    * skew-immune.
     *
     * A shingle shared by m docs emits m^2/2 join rows all carrying ONE
     * join key — at web scale a boilerplate shingle in 30% of a shard
@@ -577,9 +545,9 @@ object TextDedup {
     // cannot perturb it. Broadcast is gated on MEASURED bytes
     // ([[IndexStore.broadcastIfFits]]): matchable grows with the
     // corpus's duplicate vocabulary, and Catalyst's own stats gate
-    // under-states string-heavy sets (compressed parquet size) — the
-    // SpillSmoke r13 starved run killed this exact join through a
-    // planner-chosen broadcast before this gate existed. Past the cap
+    // under-states string-heavy sets (compressed parquet size) — a
+    // starved-heap run killed this exact join through a planner-chosen
+    // broadcast before this gate existed. Past the cap
     // the semi-join runs SHUFFLE_HASH (the hint also SUPPRESSES the
     // planner's stats-based broadcast) — still O(occurrences), never a
     // failure. Same gate for `hot`: bounded by |corpus|/HotShingleDf
@@ -1345,7 +1313,7 @@ object TextDedup {
     *
     * The catalog t22 keeps the direct plan: at gate scale the whole
     * vocab broadcasts, which is the same skew-immunity for free
-    * (measured in ScaleSmoke's ZIPF section — see PLANS.md). */
+    * (measured on a Zipf corpus — see PLANS.md). */
   private[graft] def t22HeadHatch(s: SparkSession, d: String, headK: Int = 1000): DataFrame = {
     val occ = docs(s, d)
       .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
@@ -1829,12 +1797,6 @@ object TextDedup {
     * convention): the state a nightly maintenance job starts from. c04
     * grows it with [[pairDelta]] and gates that resident ∪ delta equals
     * the full rebuild. Same [[IndexStore]] contract as [[PairIndex]]. */
-  /** The resident-style build body (docs UNfiltered on the verify side,
-    * bands filtered) — the diagnosis baseline for tools.Night0Diag. */
-  private[graft] def residentPlan(s: SparkSession, d: String): DataFrame =
-    lshPairsFromBands(docs(s, d),
-      corpusBands(s, d).filter(col("doc_id") % 10 =!= 7), setsBytesFor(d))
-
   object ResidentPairIndex {
     private[graft] def indexDirFor(d: String): String =
       s"${sys.props("java.io.tmpdir")}/graft_pairs_res_l1_${IndexStore.corpusFingerprint(d, "documents")}"
@@ -1941,8 +1903,7 @@ object TextDedup {
     private[graft] def stateDirFor(d: String, night: Int): String =
       s"${sys.props("java.io.tmpdir")}/graft_pairs_ring_l2_${IndexStore.corpusFingerprint(d, "documents")}_n$night"
 
-    /** Night 0's build body without the publication write — exposed for
-      * plan diagnosis (tools.Night0Diag). */
+    /** Night 0's build body without the publication write. */
     private[graft] def night0Plan(s: SparkSession, d: String): DataFrame =
       lshPairsFromBands(docs(s, d).filter(presentAt(0)),
         corpusBands(s, d).filter(presentAt(0)), setsBytesFor(d))

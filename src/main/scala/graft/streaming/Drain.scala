@@ -65,9 +65,6 @@ object Drain {
   private val jvmTag = java.util.UUID.randomUUID().toString.take(8)
   private val ckptSeq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Last drained query, for tools (StProbe) to read progress off —
-    * diagnostic only, never consulted by the engine. */
-  @volatile private[graft] var lastQuery: StreamingQuery = _
   /** Driver-side phase split of the last drain (plan build / start /
     * await) — diagnostic for the bounded-drain floor work only. */
   @volatile private[graft] var lastPhases: String = ""
@@ -94,15 +91,6 @@ object Drain {
           // pure overhead at this lifetime
           s2.conf.set("spark.sql.streaming.minBatchesToRetain", "1")
           s2.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-          // experiment hook (StProbe A/B runs): extra confs applied at
-          // child CREATION like everything else — semicolon-separated
-          // k=v pairs, e.g. GRAFT_DRAIN_CONF="spark.sql.x=1;spark.sql.y=2"
-          sys.env.get("GRAFT_DRAIN_CONF").foreach(_.split(';').foreach { kv =>
-            kv.split("=", 2) match {
-              case Array(k, v) if k.nonEmpty => s2.conf.set(k, v)
-              case _ =>
-            }
-          })
           perParent.put(statePartitions, s2)
           s2
         }
@@ -116,8 +104,7 @@ object Drain {
   def toTable(parent: SparkSession, name: String, mode: OutputMode,
               statePartitions: Int = 4)(plan: SparkSession => DataFrame)
       : (StreamingQuery, DataFrame) = {
-    val parts = sys.env.get("GRAFT_DRAIN_PARTS").map(_.toInt).getOrElse(statePartitions)
-    val s2 = session(parent, parts)
+    val s2 = session(parent, statePartitions)
     // unique per drain: a reused checkpoint would make AvailableNow see
     // all offsets committed and drain NOTHING on a rerun (Bench runs the
     // same query three times in one JVM)
@@ -138,7 +125,6 @@ object Drain {
     val t3 = System.nanoTime()
     lastPhases = f"plan=${(t1 - t0) / 1e6}%.0fms start=${(t2 - t1) / 1e6}%.0fms " +
       f"await=${(t3 - t2) / 1e6}%.0fms"
-    lastQuery = q
     // the memory sink pins every batch's result in driver memory via the
     // temp view — drop it once the harness has consumed the frame
     graft.Lifecycle.defer { s2.catalog.dropTempView(name); () }

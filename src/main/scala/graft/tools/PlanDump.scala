@@ -9,13 +9,15 @@ import org.apache.spark.sql.SparkSession
   * core-count kernel width, reproduced exactly via
   * `spark.graft.kernel.bytesPerTask=1` — the only r22 fan-out change is
   * that width) and `<dir>/<name>_after.txt` (the byte-derived default)
-  * for every name given. */
+  * for every name given. The session runs on `local[SPARK_GRAFT_CPUS]`
+  * (default 4) with as many shuffle partitions. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.Sessions.graftDefaults(SparkSession.builder())
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -37,10 +39,12 @@ object PlanDump {
       case Some(dir) =>
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
         names.foreach { n =>
+          // restored in `finally`: a dump that throws must not leave
+          // later names' _after dumps at the legacy width
           spark.conf.set("spark.graft.kernel.bytesPerTask", "1")
-          java.nio.file.Files.writeString(
+          try java.nio.file.Files.writeString(
             java.nio.file.Paths.get(s"$dir/${n}_before.txt"), formatted(n))
-          spark.conf.unset("spark.graft.kernel.bytesPerTask")
+          finally spark.conf.unset("spark.graft.kernel.bytesPerTask")
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(s"$dir/${n}_after.txt"), formatted(n))
           println(s"dumped $n")

@@ -3,58 +3,39 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scale-growth experiment: synthesize K x the documents table into /tmp
-  * and time the exact inverted-index Jaccard (t06) against MinHash+LSH
-  * (t07) as N grows. The point being demonstrated: the exact all-pairs
-  * structure grows super-linearly (every shared shingle contributes a
-  * pair row), while LSH candidate generation stays ~linear — the reason
-  * t07 is the 100 TB path. Results recorded in PLANS.md. */
+/** Depth runs on generated corpora larger than the sf0.1 tables, one
+  * section per argument (no arguments = every section):
+  *
+  *  - `growth`: K x replicated documents; exact inverted-index Jaccard
+  *    (t06) against MinHash+LSH (t07), span dedup, CC and boilerplate as
+  *    N grows. The exact all-pairs structure grows super-linearly (every
+  *    shared shingle contributes a pair row), while LSH candidate
+  *    generation stays ~linear — the reason t07 is the 100 TB path;
+  *  - `ring`: c04's nightly maintenance, stage by stage, at 125k docs;
+  *  - `soak`: c08's N-night cost curve at 125k docs;
+  *  - `ccskew`: CC over a giant chained component (deep diameter);
+  *  - `stskew`: st04/st09's stream-stream join under a hot user.
+  *
+  * The session runs on `local[SPARK_GRAFT_CPUS]` (default 4) with as many
+  * shuffle partitions. Results are recorded in PLANS.md. */
 object ScaleSmoke {
 
-  /** Time `f` and report (seconds, result, max task ms, p50 task ms) —
-    * the task-duration spread is the skew signal: a bounded max/p50
-    * ratio means no single key group serialized the stage. */
-  private def spreadOf(spark: SparkSession)(f: => Long): (Double, Long, Long, Long) = {
-    val taskMs = new java.util.concurrent.ConcurrentLinkedQueue[Long]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskInfo != null) taskMs.add(e.taskInfo.duration)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val t0 = System.nanoTime(); val n = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      graft.Lifecycle.release(spark)
-      // deterministic drain barrier, not a sleep: on large jobs the async
-      // bus can still be delivering task-end events past any fixed wait
-      // (r19 ADVICE — undercounted task metrics on the mega sections)
-      org.apache.spark.GraftListenerBus.drain(spark.sparkContext, 30000L)
-      val ds = taskMs.toArray(Array.empty[java.lang.Long]).map(_.longValue()).sorted
-      val p50 = if (ds.isEmpty) 0L else ds(ds.length / 2)
-      val mx = if (ds.isEmpty) 0L else ds.last
-      (dt, n, mx, p50)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   def main(args: Array[String]): Unit = {
-    // Section selection: no args = run everything (the r8 behavior);
-    // otherwise each arg names a section. `sketch` and `extra` re-read
-    // the /tmp corpora that `growth` writes, so run growth first (or
-    // once) when invoking those selectively.
+    // `ring` and `soak` share one 25x corpus, written on first use
     val want: String => Boolean =
       if (args.isEmpty) _ => true else args.toSet
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.Sessions.graftDefaults(SparkSession.builder())
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     /** The ONE timing body every section's local `time` delegates to:
       * stop the clock, then sweep per-query residue (cache/checkpoint
-      * blocks) so it cannot pollute the next measurement. Centralized
-      * (r14 review) so a protocol change cannot silently skew one
-      * section. */
+      * blocks) so it cannot pollute the next measurement. Centralized so
+      * a protocol change cannot silently skew one section. */
     def timeReleasing[T](f: => T): (Double, T) = {
       val t0 = System.nanoTime(); val v = f
       val dt = (System.nanoTime() - t0) / 1e9
@@ -62,33 +43,8 @@ object ScaleSmoke {
       (dt, v)
     }
 
-    /** Task-metric meter: shuffle write bytes + max per-task exec
-      * memory around `f` — ONE body for every depth section (`mega`,
-      * `mediamega`; a per-section copy is the drift class the r18
-      * review closed for the cap parser). */
-    def metered[T](f: => T): (Double, T, Long, Long) = {
-      val sh = new java.util.concurrent.atomic.AtomicLong
-      val pk = new java.util.concurrent.atomic.AtomicLong
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null) {
-            sh.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-            pk.getAndAccumulate(e.taskMetrics.peakExecutionMemory, math.max)
-          }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        val (t, v) = timeReleasing(f)
-        // drain barrier (see spreadOf): the fixed 500 ms sleep this
-        // replaces undercounted shuffle bytes / peak memory whenever the
-        // bus was still delivering a big job's task-end events
-        org.apache.spark.GraftListenerBus.drain(spark.sparkContext, 30000L)
-        (t, v, sh.get(), pk.get())
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
-
     val base = graft.Tables.documents(spark, "/root/testdata/sf0.1")
-    // lazy: sections that never print a docs count (e.g. `stream`) must
+    // lazy: sections that never print a docs count (e.g. `stskew`) must
     // not pay a full documents scan at startup
     lazy val n0 = base.count()
 
@@ -120,23 +76,6 @@ object ScaleSmoke {
       dir
     }
 
-    /** K event replicas (new event_ids, SAME users and timestamps) at
-      * /tmp/graft_scale_ev_{k}x, in the int64-nanos layout Tables.events
-      * expects. Same-user/same-ts is the point: per-user and per-day
-      * shapes must collapse to constants while raw volume grows Kx. */
-    def ensureEventsReplicas(k: Int): String = {
-      val dir = s"/tmp/graft_scale_ev_${k}x"
-      if (!new java.io.File(s"$dir/events.parquet").isDirectory) {
-        val ev0 = graft.Tables.events(spark, "/root/testdata/sf0.1")
-        (0 until k).map { i =>
-          if (i == 0) ev0
-          else ev0.withColumn("event_id", col("event_id") + lit(i.toLong * 100000000L))
-        }.reduce(_ unionAll _)
-          .withColumn("ts", expr("unix_micros(ts) * 1000"))
-          .write.mode("overwrite").parquet(s"$dir/events.parquet")
-      }
-      dir
-    }
     if (want("growth")) Seq(1, 4, 12).foreach { k =>
       // growth owns the corpora: rewrite unconditionally so this run's
       // timings are against freshly-written files
@@ -165,494 +104,6 @@ object ScaleSmoke {
       // alternating variant halves ROUNDS at one extra shuffle per
       // round, so it only pays when the measured diameter is deep
       println(f"SCALE docs=${n0 * k}%7d cc=${tCc}%6.1fs ($nCc docs, $ccRounds rounds)  boilerplate=${tBp}%6.1fs ($nBp docs)")
-    }
-
-    // ---- sketch growth (r8): sketch size is O(1) in corpus size ----
-    // CMS counters stay <= d x w = 4096 rows and HLL registers stay 256
-    // however large the corpus; what should grow is ONLY the scan. The
-    // accuracy contracts must hold as distinct shingles grow ~12x.
-    if (want("sketch")) {
-      def time[T](f: => T): (Double, T) = timeReleasing(f)
-      Seq(1, 4, 12).foreach { k =>
-        val dir = s"/tmp/graft_scale_${k}x"
-        val (tCms, cms) = time(graft.operators.Sketches.sk01.fn(spark, dir).collect())
-        val overshoot = cms.map(r => r.getAs[Long]("cms_est") - r.getAs[Long]("exact_cnt")).max
-        val (tHll, hll) = time(graft.operators.Sketches.sk02.fn(spark, dir).collect()(0))
-        val est = hll.getAs[Double]("hll_estimate")
-        val exact = hll.getAs[Long]("exact_distinct")
-        println(f"SKETCH docs=${n0 * k}%7d cms=${tCms}%5.1fs (top-20 max overshoot $overshoot) " +
-          f"hll=${tHll}%5.1fs est=${est}%.0f exact=$exact err=${(est - exact) * 100.0 / exact}%+.1f%%")
-        assert(cms.forall(r => r.getAs[Long]("cms_est") >= r.getAs[Long]("exact_cnt")))
-      }
-    }
-
-    // ---- hot-shingle skew stress (r8; r10 flips the default) ----
-    // One phrase in ~30% of docs: the direct t06 join lands a df=1500
-    // shingle's ~1.1M-pair fan-out on ONE key group (AQE splits skewed
-    // partitions, not key groups); the stats-gated hatch — now the
-    // catalog t06 default — detects the hot shingle from its own df
-    // profile and spreads it over HotBlocks keys. Both must return the
-    // SAME pairs (exactness also pinned forced-hot in OperatorsSpec).
-    if (want("skew")) {
-      val skewDir = "/tmp/graft_scale_skew"
-      base.select(col("doc_id"),
-          when(pmod(col("doc_id"), lit(10)) < 3,
-            concat(col("text"), lit(" zzqq common boiler plate")))
-            .otherwise(col("text")).as("text"),
-          col("lang"), col("source"), col("n_chars"))
-        .write.mode("overwrite").parquet(s"$skewDir/documents.parquet")
-      val (tD, nD, maxD, p50D) = spreadOf(spark)(
-        graft.operators.TextDedup.jaccardPairsDirect(spark, skewDir).count())
-      val (tH, nH, maxH, p50H) = spreadOf(spark)(
-        graft.operators.TextDedup.t06.fn(spark, skewDir).count())
-      println(f"SKEW direct  t06=${tD}%6.1fs ($nD pairs) maxTask=${maxD}ms p50Task=${p50D}ms")
-      println(f"SKEW default t06=${tH}%6.1fs ($nH pairs) maxTask=${maxH}ms p50Task=${p50H}ms")
-      assert(nD == nH, s"skew hatch changed the pair count: $nD vs $nH")
-    }
-
-    // ---- zipfian hot-token stress (r8): one token = ~27% of all
-    // occurrences. t22's direct plan is skew-immune while the vocab
-    // BROADCASTS (the occurrence side never exchanges on token); the
-    // regime under test is large-vocab (broadcast disabled -> shuffle
-    // join), where the zipf head concentrates occurrence rows on few
-    // join keys — measured with AQE skew-join on/off and with the
-    // broadcast-head hatch. t20's window is the opposite: a window key
-    // group CANNOT be skew-split, so the agg+broadcast hatch is the only
-    // escape. Numbers -> PLANS.md hot-key table.
-    if (want("zipf")) {
-      val zipfDir = "/tmp/graft_scale_zipf"
-      base.select(col("doc_id"),
-          concat(col("text"), lit(" zzcommon" * 20)).as("text"),
-          col("lang"), col("source"), col("n_chars"))
-        .write.mode("overwrite").parquet(s"$zipfDir/documents.parquet")
-      def run(tag: String)(f: => Long): Unit = {
-        val (dt, n, mx, p50) = spreadOf(spark)(f)
-        println(f"ZIPF $tag%-28s ${dt}%6.1fs ($n rows) maxTask=${mx}ms p50Task=${p50}ms")
-      }
-      run("t22_direct_bcast")(
-        graft.operators.TextDedup.t22.fn(spark, zipfDir).count())
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      run("t22_shuffle_skewjoin_on")(
-        graft.operators.TextDedup.t22.fn(spark, zipfDir).count())
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-      run("t22_shuffle_skewjoin_off")(
-        graft.operators.TextDedup.t22.fn(spark, zipfDir).count())
-      run("t22_head_hatch_no_bcast")(
-        graft.operators.TextDedup.t22HeadHatch(spark, zipfDir).count())
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      run("t20_direct_window")(
-        graft.operators.TextDedup.t20.fn(spark, zipfDir).count())
-      run("t20_agg_bcast_hatch")(
-        graft.operators.TextDedup.t20AggHatch(spark, zipfDir).count())
-    }
-
-    // ---- embedding path: s01 all-pairs vs Similarity.lshPairs ----
-    // The text version of this experiment caught a real algorithmic bug
-    // (the quasi-monotonic minhash permutations); the embedding path gets
-    // the same scrutiny: replicas are near-duplicates of their original
-    // (one component shifted), so cross-replica pairs sit near cos=1 and
-    // any banding miss shows up as recall < 1 against the exact twin.
-    val emb0 = graft.Tables.embeddings(spark, "/root/testdata/sf0.1")
-    lazy val e0 = emb0.count()
-
-    /** K crossJoin-replicated embeddings (distinct vec_ids, per-replica
-      * first-component shift) at /tmp/graft_scale_embinc_<k>x — the ONE
-      * builder shared by the `inc` and `deep` sections (two inline
-      * copies would let the perturbation drift and desynchronize the
-      * SCALE-INC and SCALE-DEEP corpora). Cached fixture validated by
-      * SCHEMA and ROW COUNT, same rule as the stream fixtures: an
-      * isDirectory-only check would serve a torn write or a stale
-      * vintage forever. */
-    def ensureEmbIncReplicas(k: Int): String = {
-      val dir = s"/tmp/graft_scale_embinc_${k}x"
-      val replicas = emb0.crossJoin(spark.range(k).select(col("id").as("rep")))
-        .select(
-          (col("vec_id") + col("rep") * lit(1000000L)).as("vec_id"),
-          transform(col("embedding"), (x, idx) =>
-            when(idx === 0,
-              (x + col("rep").cast("double") * lit(0.05)).cast("float"))
-              .otherwise(x)).as("embedding"),
-          col("label"))
-      val fix = s"$dir/embeddings.parquet"
-      val valid = new java.io.File(fix).isDirectory && {
-        try {
-          val cached = spark.read.parquet(fix)
-          cached.schema == replicas.schema && cached.count() == e0 * k
-        } catch { case _: Exception => false }
-      }
-      if (!valid)
-        replicas.repartition(32).write.mode("overwrite").parquet(fix)
-      dir
-    }
-    if (want("emb")) Seq(1, 4, 12).foreach { k =>
-      val dir = s"/tmp/graft_scale_emb_${k}x"
-      val copies = (0 until k).map { i =>
-        if (i == 0) emb0
-        else emb0.select(
-          (col("vec_id") + lit(i.toLong * 1000000L)).as("vec_id"),
-          transform(col("embedding"), (x, idx) =>
-            when(idx === 0, (x + lit(0.05 * i)).cast("float")).otherwise(x))
-            .as("embedding"),
-          col("label"))
-      }
-      copies.reduce(_ unionAll _).write.mode("overwrite")
-        .parquet(s"$dir/embeddings.parquet")
-      def timeCollect(df: org.apache.spark.sql.DataFrame): (Double, Set[(Long, Long)]) = {
-        val t0 = System.nanoTime()
-        val rows = df.select(col("id1"), col("id2")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.Lifecycle.release(spark)
-        (dt, rows)
-      }
-      val (tExact, exact) = timeCollect(graft.operators.Similarity.s01.fn(spark, dir))
-      val (tLsh, lsh) = timeCollect(graft.operators.Similarity.lshPairs(spark, dir))
-      val recall = if (exact.isEmpty) 1.0 else (exact & lsh).size.toDouble / exact.size
-      println(f"SCALE-EMB vecs=${e0 * k}%7d exact=${tExact}%6.1fs (${exact.size} pairs)  " +
-        f"lsh=${tLsh}%6.1fs (${lsh.size} pairs)  recall=$recall%.4f  " +
-        f"invented=${(lsh -- exact).size}")
-      // realistic dedup cut: cos >= 0.9 lets the banding go sharp
-      // (T=16 x P=8 => 256 buckets/table) — same join shape, candidates
-      // pruned by orders of magnitude instead of ~T/4 x all-pairs
-      val planes98 = graft.operators.Similarity.makePlanes(16, 8, seed = 23)
-      val (tTuned, tuned) = timeCollect(
-        graft.operators.Similarity.lshPairsTuned(spark, dir, 0.9, planes98, 16, 8))
-      val (tExact09, exact09) = timeCollect(
-        graft.operators.Similarity.s01.fn(spark, dir).filter(col("cos") >= 0.9))
-      val recall09 = if (exact09.isEmpty) 1.0 else (exact09 & tuned).size.toDouble / exact09.size
-      println(f"SCALE-EMB-09 vecs=${e0 * k}%7d exact=${tExact09}%6.1fs (${exact09.size} pairs)  " +
-        f"lsh(T16,P8)=${tTuned}%6.1fs (${tuned.size} pairs)  recall=$recall09%.4f")
-      // r12 slate #5: the full ANN + embedding-dedup ring under the SAME
-      // growth — each timing includes its persisted-index build (the
-      // dominant term, and the one that must stay ~linear in vectors;
-      // the query sets are constant by construction, so any
-      // super-linear jump here is an index-build scale bug)
-      def timeCount(df: => org.apache.spark.sql.DataFrame): (Double, Long) = {
-        val t0 = System.nanoTime(); val n = df.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.Lifecycle.release(spark)
-        (dt, n)
-      }
-      val (tT09, nT09) = timeCount(graft.operators.Advanced.t09.fn(spark, dir))
-      val (tS03, nS03) = timeCount(graft.operators.Similarity.s03.fn(spark, dir))
-      val (tS04, nS04) = timeCount(graft.operators.Similarity.s04.fn(spark, dir))
-      println(f"SCALE-ANN vecs=${e0 * k}%7d t09=${tT09}%6.1fs ($nT09 dups)  " +
-        f"s03=${tS03}%6.1fs ($nS03 rows)  s04=${tS04}%6.1fs ($nS04 rows)")
-    }
-
-    // ---- band/grid joins stay grid-bounded as the fact side grows ----
-    // e07's date-band join collapses events to |user-day| pairs BEFORE
-    // the broadcast band join, and the K event replicas reuse the same
-    // users and timestamps — so the join's input, output (the day axis)
-    // and the band fan-out must stay EXACTLY constant while the scanned
-    // volume grows Kx; only the pre-distinct scan may grow. v03's grid
-    // is |sources|·|vocab| rows however large the corpus; replicas add
-    // one vocab token each, so the grid (and the |sources|-row result)
-    // stays ~fixed while the occurrence scan grows Kx. Numbers ->
-    // PLANS.md SCALE-BAND / SCALE-GRID tables.
-    if (want("bands")) {
-      def time[T](f: => T): (Double, T) = timeReleasing(f)
-      val ne0 = graft.Tables.events(spark, "/root/testdata/sf0.1").count()
-      var e07Rows = -1L
-      Seq(1, 4, 12).foreach { k =>
-        val dir = ensureEventsReplicas(k)
-        val (tE, rows) = time(graft.operators.Advanced.e07.fn(spark, dir).count())
-        if (k == 1) e07Rows = rows
-        println(f"SCALE-BAND events=${ne0 * k}%8d e07=${tE}%6.1fs ($rows days)")
-        assert(rows == e07Rows, s"day axis grew with event volume: $rows vs $e07Rows")
-      }
-      var v03Rows = -1L
-      Seq(1, 4, 12).foreach { k =>
-        val dir = ensureDocsReplicas(k)
-        val (tV, rows) = time(graft.operators.Advanced.v03.fn(spark, dir).count())
-        if (k == 1) v03Rows = rows
-        println(f"SCALE-GRID docs=${n0 * k}%7d v03=${tV}%6.1fs ($rows sources)")
-        assert(rows == v03Rows, s"source axis changed: $rows vs $v03Rows")
-      }
-    }
-
-    // ---- watermark-bounded streaming state (the st* 100 TB claim) ----
-    // Replica i of the events table is TIME-SHIFTED by i x 31 days, so
-    // the timeline (and the emitted window count) grows ~Kx, while the
-    // files are written range-partitioned on ts and streamed in time
-    // order a couple at a time. Under a 1h watermark in Append mode the
-    // ONLY state the hourly aggregate may retain is the windows the
-    // watermark has not yet passed — so max in-flight state rows must
-    // stay ~flat as the timeline grows, while emitted windows scale Kx.
-    // That flatness IS the unbounded-ingest claim the st* catalog makes:
-    // state is O(open windows), never O(history). (Emitted lags total by
-    // the final batch's windows: Append emits a window only once a LATER
-    // batch advances the watermark past it, and a bounded drain has no
-    // later batch for the tail — a production stream's next arrival
-    // flushes it.)
-    if (want("stream")) {
-      val ev0 = graft.Tables.events(spark, "/root/testdata/sf0.1")
-      val ne0 = ev0.count()
-      var maxState1 = -1L; var emitted1 = -1L
-      Seq(1, 4, 12).foreach { k =>
-        val dir = s"/tmp/graft_scale_st_${k}x"
-        // Cross-JVM reuse of a /tmp fixture is only safe when the cached
-        // copy demonstrably matches THIS vintage of the corpus (the
-        // driver regenerates /root/testdata between rounds, and an
-        // interrupted prior run leaves a torn write): validate by row
-        // count AND schema — a regenerated vintage can keep the row
-        // count while flipping a physical type (the r10 ns→µs ts flip),
-        // which would silently skew the SCALE-STREAM numbers — and
-        // rewrite on any mismatch or read failure. ev0's schema is the
-        // already-normalized one (Tables.events), so a cached fixture
-        // written from an older encoding shows up as a schema mismatch.
-        val cachedOk =
-          new java.io.File(s"$dir/events.parquet").isDirectory &&
-            scala.util.Try {
-              val cached = spark.read.parquet(s"$dir/events.parquet")
-              cached.schema == ev0.schema && cached.count() == ne0 * k
-            }.getOrElse(false)
-        if (!cachedOk) {
-          (0 until k).map { i =>
-            if (i == 0) ev0
-            else ev0
-              .withColumn("event_id", col("event_id") + lit(i.toLong * 100000000L))
-              .withColumn("ts", col("ts") + expr(s"INTERVAL ${31 * i} DAYS"))
-          }.reduce(_ unionAll _)
-            .repartitionByRange(8 * k, col("ts"))
-            .sortWithinPartitions("ts")
-            .write.mode("overwrite").parquet(s"$dir/events.parquet")
-          // the streaming file source schedules files by MODIFICATION
-          // time, and a parallel write stamps every part-file the same
-          // second — leaving batch order arbitrary, so an early batch
-          // can carry a late file, advance the watermark to the end,
-          // and get all earlier data dropped as late. Stamp ascending
-          // mtimes in part-file order (range partition i = i-th time
-          // slice) so arrival order is time order, as it would be for
-          // a production ingest directory fed by an upstream writer.
-          val parts = new java.io.File(s"$dir/events.parquet")
-            .listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
-          val t00 = System.currentTimeMillis() - parts.length * 2000L
-          parts.zipWithIndex.foreach { case (f, i) =>
-            f.setLastModified(t00 + i * 2000L) }
-        }
-        // NOT Drain.toTable: the drain sessions disable no-data
-        // micro-batches (their st* plans all emit in the data batch),
-        // but this Append-mode windowed aggregate needs the trailing
-        // watermark-advancing empty batch or the final data batch's
-        // windows never flush — exactly the exclusion Drain's contract
-        // documents. Own child session, no-data batches left enabled.
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "4")
-        val viewName = s"scale_stream_${k}x"
-        val ckpt = s"/tmp/graft_scale_st_ckpt_${k}_${System.nanoTime()}"
-        val t0 = System.nanoTime()
-        val onDisk = s2.read.parquet(s"$dir/events.parquet").schema
-        val q = graft.streaming.EventsStream.hourlyAggPlan(
-            s2.readStream.schema(onDisk)
-              .option("maxFilesPerTrigger", "2")
-              .parquet(s"$dir/events.parquet"))
-          .writeStream.format("memory").queryName(viewName)
-          .option("checkpointLocation", ckpt)
-          .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val emitted = s2.table(viewName).count()
-        s2.catalog.dropTempView(viewName)
-        val dt = (System.nanoTime() - t0) / 1e9
-        val progs = q.recentProgress.filter(_.stateOperators.nonEmpty)
-        val maxState = if (progs.isEmpty) 0L
-          else progs.map(_.stateOperators.head.numRowsTotal).max
-        val batches = progs.length
-        graft.Lifecycle.release(spark)
-        println(f"SCALE-STREAM events=${ne0 * k}%8d drain=${dt}%6.1fs " +
-          f"batches=$batches emitted=$emitted maxStateRows=$maxState")
-        if (k == 1) { maxState1 = maxState; emitted1 = emitted }
-        else {
-          // emitted windows scale with the timeline...
-          assert(emitted > emitted1 * k * 7 / 10,
-            s"emitted windows did not scale: $emitted vs ${emitted1}x$k")
-          // ...while in-flight state stays bounded by the watermark
-          assert(maxState <= maxState1 * 2,
-            s"state grew with history: $maxState vs $maxState1 at 1x")
-        }
-      }
-    }
-
-    // ---- r8 additions: semantic dedup (s06) and phash dedup (mm04) ----
-    // s06's pairwise stage is bounded by the IVF cell sizes (~N/K per
-    // cell), so with K fixed the compare cost grows ~N^2/K — the
-    // measurement shows the knee that production flattens by scaling K
-    // with the corpus; the index BUILD (KMeans fit) is timed separately
-    // because a deployment amortizes it across runs. mm04 is a per-row
-    // kernel into one hash aggregate: time should track N ~linearly.
-    if (want("extra")) {
-      def time[T](f: => T): (Double, T) = timeReleasing(f)
-      Seq(1, 4, 12).foreach { k =>
-        val dir = s"/tmp/graft_scale_emb_${k}x"
-        val (tBuild, _) = time(graft.operators.Similarity.IvfIndex.ensure(spark, dir))
-        val (tS06, rows) = time(graft.operators.Similarity.s06.fn(spark, dir).collect())
-        val dropped = rows.count(r => !r.getBoolean(2))
-        println(f"SCALE-SEMDEDUP vecs=${e0 * k}%7d build=${tBuild}%6.1fs " +
-          f"probe=${tS06}%6.1fs (${rows.length} vecs, $dropped dropped)")
-      }
-      Seq(1, 4, 12).foreach { k =>
-        val dir = s"/tmp/graft_scale_${k}x"
-        val (tMm, groups) = time(graft.operators.Multimodal.mm04.fn(spark, dir).count())
-        println(f"SCALE-PHASH docs=${n0 * k}%7d mm04=${tMm}%6.1fs ($groups hash groups)")
-      }
-      // ---- span-level chunk dedup (r8 continuation) ----
-      // Replicas differ from their source doc only in the final span
-      // (one appended token), so KEPT spans should stay ~flat while
-      // total spans grow ~Kx — the sub-document analog of the
-      // replica-dominated semantic-dedup result above. Cost shape:
-      // scan + two span-bounded shuffles (first-occurrence window,
-      // per-doc reassembly); a corpus-hot span concentrates a window
-      // partition exactly like t20's hot shingle (same hatch family).
-      Seq(1, 4, 12).foreach { k =>
-        val dir = s"/tmp/graft_scale_${k}x"
-        val (tCh, r) = time(
-          graft.operators.TextDedup.t26.fn(spark, dir)
-            .agg(sum(col("n_chunks")).as("spans"), sum(col("n_kept")).as("kept"))
-            .collect()(0))
-        println(f"SCALE-CHUNK docs=${n0 * k}%7d t26=${tCh}%6.1fs " +
-          f"spans=${r.getLong(0)} kept=${r.getLong(1)}")
-      }
-      // ---- gap-fill scaffold is bounded by wall-clock, not data ----
-      // K event replicas land inside the SAME hour span, so e08's
-      // output (types x hours) must stay EXACTLY constant while input
-      // rows grow Kx; cost should grow only with the map-side combined
-      // hourly pre-aggregate (sub-linear end to end), never with the
-      // scaffold/window side.
-      locally {
-        val ev0 = graft.Tables.events(spark, "/root/testdata/sf0.1")
-        val ne0 = ev0.count()
-        var rows1 = -1L
-        Seq(1, 4, 12).foreach { k =>
-          val dir = s"/tmp/graft_scale_ev_${k}x"
-          (0 until k).map { i =>
-            if (i == 0) ev0
-            else ev0.withColumn("event_id", col("event_id") + lit(i.toLong * 100000000L))
-          }.reduce(_ unionAll _)
-            // back to the int64-nanos layout Tables.events expects
-            .withColumn("ts", expr("unix_micros(ts) * 1000"))
-            .write.mode("overwrite").parquet(s"$dir/events.parquet")
-          val (tGf, rows) = time(graft.operators.Advanced.e08.fn(spark, dir).count())
-          if (k == 1) rows1 = rows
-          println(f"SCALE-GAPFILL events=${ne0 * k}%8d e08=${tGf}%6.1fs ($rows rows)")
-          assert(rows == rows1,
-            s"scaffold grew with data volume: $rows vs $rows1")
-        }
-      }
-    }
-
-    // ---- incremental IVF maintenance: growth cost ∝ new data ----
-    // The s08 contract measured: a growth step (assign ONLY the new
-    // slice against frozen centroids, publish a delta segment) vs the
-    // from-scratch counterfactual (re-assign the whole corpus against
-    // the same centroids) vs the full base build (KMeans fit included —
-    // what a non-incremental deployment re-pays whenever the corpus
-    // fingerprint moves). delta/scratch should track the slice fraction
-    // (~20% here) as N grows; the fit-included build dwarfs both.
-    // Numbers -> PLANS.md SCALE-INC table.
-    if (want("inc")) {
-      def time[T](f: => T): (Double, T) = timeReleasing(f)
-      Seq(12, 48, 192, 768).foreach { k =>
-        // crossJoin replication (not a k-way unionAll — a 192-branch
-        // union is an analyzer stress test, one range join is not);
-        // per-replica first-component shift keeps vectors distinct
-        val dir = ensureEmbIncReplicas(k)
-        // fresh build every run: stale per-fingerprint publications would
-        // time a no-op read instead of the maintenance step
-        import graft.operators.Similarity.IvfIncIndex
-        Seq(IvfIncIndex.baseDirFor(dir), IvfIncIndex.deltaDirFor(dir))
-          .foreach(p => graft.Lifecycle.deleteRecursively(new java.io.File(p)))
-        val (tBase, _) = time(IvfIncIndex.ensureBase(spark, dir))
-        val (tDelta, dd) = time(IvfIncIndex.ensureDelta(spark, dir))
-        val nDelta = spark.read.parquet(s"$dd/assigned").count()
-        // counterfactual: a non-incremental maintenance pass re-assigns
-        // the ENTIRE grown corpus against the same frozen centroids
-        val scratchOut = s"/tmp/graft_scale_inc_scratch_${k}x"
-        val (tScratch, _) = time {
-          graft.functions.VectorExpressions.register(spark)
-          val centroids = spark.read.parquet(
-            s"${IvfIncIndex.baseDirFor(dir)}/centroids")
-          val all = graft.Tables.embeddings(spark, dir)
-            .repartition(spark.sparkContext.defaultParallelism)
-            .select(col("vec_id"),
-              transform(col("embedding"), x => x.cast("double")).as("embedding"))
-          IvfIncIndex.assign(all, centroids)
-            .write.mode("overwrite").parquet(scratchOut)
-        }
-        println(f"SCALE-INC vecs=${e0 * k}%7d baseBuild=${tBase}%6.1fs " +
-          f"deltaStep=${tDelta}%6.1fs ($nDelta rows) " +
-          f"scratchAssign=${tScratch}%6.1fs (${e0 * k} rows) " +
-          f"delta/scratch=${tDelta / tScratch}%.2f")
-      }
-    }
-    // ---- deep growth (r13): a decade past the r11/r12 tables ----
-    // t07's persisted pair index at k ∈ {25, 50, 100} (up to 500k docs):
-    // replicas form near-dup clusters of size ~k, so the TRUE pair
-    // output grows Θ(n0·k²) BY CONSTRUCTION — the scale claim under
-    // test is therefore (a) build cost per EMITTED pair flat-or-falling
-    // (output-driven, like t32's span table), and (b) the incremental
-    // consumer t25 staying bounded by the batch's pair NEIGHBORHOOD,
-    // not the corpus. s04's IVF build + s08's delta maintenance run at
-    // k=100 (200k vecs) alongside: both are Θ(vectors) — index build
-    // linear, delta step ∝ the new slice only.
-    if (want("deep")) {
-      def time[T](f: => T): (Double, T) = timeReleasing(f)
-      import graft.operators.{Similarity, TextDedup}
-      Seq(25, 50, 100).foreach { k =>
-        val dir = ensureDocsReplicas(k)
-        // fresh-build timing: a pre-published index for this fingerprint
-        // would time a parquet read instead of the LSH build
-        graft.Lifecycle.deleteRecursively(
-          new java.io.File(TextDedup.PairIndex.indexDirFor(dir)))
-        val (tBuild, nPairs) = time(TextDedup.PairIndex.ensure(spark, dir).count())
-        val (tQuery, nKept) = time(TextDedup.t25.fn(spark, dir).count())
-        println(f"SCALE-DEEP docs=${n0 * k}%7d pairBuild=${tBuild}%7.1fs " +
-          f"($nPairs pairs, ${tBuild * 1e6 / math.max(nPairs, 1)}%.1f us/pair) " +
-          f"t25=${tQuery}%6.1fs ($nKept rows)")
-      }
-      locally {
-        val k = 100
-        val dir = ensureEmbIncReplicas(k)
-        import graft.operators.Similarity.IvfIncIndex
-        (Seq(Similarity.IvfIndex.indexDirFor(dir), IvfIncIndex.baseDirFor(dir),
-          IvfIncIndex.deltaDirFor(dir)))
-          .foreach(p => graft.Lifecycle.deleteRecursively(new java.io.File(p)))
-        val (tS04, nS04) = time(Similarity.s04.fn(spark, dir).count())
-        val (tBase, _) = time(IvfIncIndex.ensureBase(spark, dir))
-        val (tDelta, dd) = time(IvfIncIndex.ensureDelta(spark, dir))
-        val nDelta = spark.read.parquet(s"$dd/assigned").count()
-        println(f"SCALE-DEEP vecs=${e0 * k}%7d s04BuildProbe=${tS04}%7.1fs " +
-          f"($nS04 rows) s08Base=${tBase}%6.1fs s08Delta=${tDelta}%6.1fs " +
-          f"($nDelta new-slice rows)")
-      }
-    }
-    // ---- persisted band-signature index (r14 slate #2) ----
-    // t34's delta with the corpus side from the persisted BandIndex vs
-    // the inline kernel recompute, at the 125k-doc decade point. The
-    // claim under measurement: the signature build is a once-per-corpus
-    // amortized cost, after which every nightly delta reads signatures
-    // (IO ∝ signature bytes) instead of re-running the tokenize+shingle+
-    // minhash kernel over the resident corpus (CPU ∝ corpus text).
-    if (want("sig")) {
-      def time[T](f: => T): (Double, T) = timeReleasing(f)
-      import graft.operators.TextDedup
-      Seq(25).foreach { k =>
-        val dir = ensureDocsReplicas(k)
-        graft.Lifecycle.deleteRecursively(
-          new java.io.File(TextDedup.BandIndex.indexDirFor(dir)))
-        spark.conf.set("spark.graft.bands.mode", "inline")
-        val (tInline, nInline) = time(TextDedup.t34.fn(spark, dir).count())
-        spark.conf.set("spark.graft.bands.mode", "persisted")
-        val (tBuild, _) = time(TextDedup.BandIndex.ensure(spark, dir).count())
-        val (tDelta, nPers) = time(TextDedup.t34.fn(spark, dir).count())
-        spark.conf.set("spark.graft.bands.mode", "auto")
-        println(f"SIG docs=${n0 * k}%7d inlineDelta=${tInline}%6.1fs " +
-          f"sigBuild=${tBuild}%6.1fs persistedDelta=${tDelta}%6.1fs " +
-          f"($nPers pairs)")
-        assert(nInline == nPers, s"band source changed the delta: $nInline vs $nPers")
-      }
     }
 
     // ---- nightly-maintenance ring at depth (r14 slate #1) ----
@@ -698,356 +149,6 @@ object ScaleSmoke {
         s"append invariant broken at depth: $nRes + $nDelta != $nFull")
     }
 
-    // ---- promotion-ring loop at depth (r15 slate #1) ----
-    // c05's N-night cycle timed night by night at the 125k-doc decade:
-    // night 0 is the only corpus-proportional build; nights 1 and 2 must
-    // cost ∝ their slice (delta band-probe + pair-set-sized promotion
-    // write) even though the RESIDENT they grow keeps getting bigger —
-    // the property that makes the loop affordable forever. The c05 gate
-    // proves every promoted state correct; this measures the cost claim.
-    if (want("ringloop")) {
-      def time[T](f: => T): (Double, T) = timeReleasing(f)
-      import graft.operators.TextDedup
-      val k = 25
-      val dir = ensureDocsReplicas(k)
-      val nights = TextDedup.PromotedPairIndex.SliceRems.size
-      (0 to nights).foreach(n => graft.Lifecycle.deleteRecursively(
-        new java.io.File(TextDedup.PromotedPairIndex.stateDirFor(dir, n))))
-      spark.conf.set("spark.graft.bands.mode", "persisted")
-      // warmup: the same pipeline shape at sf0.1 — without it the
-      // first timed night absorbs JVM/codegen/JIT and the COLD file
-      // cache of the deep corpus, and was measured at 67-180 s for an
-      // 8 s computation (r15 Night0Diag: composed night0 67.4 s cold,
-      // 8.3 s warm in one JVM) — the protocol lesson, not a plan bug
-      TextDedup.t07.fn(spark, "/root/testdata/sf0.1").count()
-      TextDedup.corpusBands(spark, dir).count() // warm the deep band scan
-      graft.Lifecycle.release(spark)
-      val counts = (0 to nights).map { n =>
-        val (tN, nPairs) = time(
-          TextDedup.PromotedPairIndex.ensure(spark, dir, n).count())
-        println(f"RING-LOOP docs=${n0 * k}%7d night$n=${tN}%6.1fs ($nPairs pairs promoted)")
-        nPairs
-      }
-      spark.conf.set("spark.graft.bands.mode", "auto")
-      val nFull = TextDedup.PairIndex.ensure(spark, dir).count()
-      assert(counts.last == nFull,
-        s"final promoted state != full rebuild: ${counts.last} vs $nFull")
-      assert(counts == counts.sorted, "a promotion lost pairs")
-    }
-
-    // ---- IVF segment compaction: read-side win (r15 slate #2) ----
-    // The fold's cost (one index-sized rewrite) vs what it buys every
-    // probe thereafter: the segmented reader unions two parquet dirs
-    // (base + delta file tails), the compacted reader scans one. Probe
-    // equality is gated (s10 == s09 == from-scratch oracle); this
-    // measures the LSM trade at depth.
-    if (want("compact")) {
-      def time[T](f: => T): (Double, T) = timeReleasing(f)
-      import graft.operators.Similarity.IvfIncIndex
-      val k = 192
-      val dir = ensureEmbIncReplicas(k)
-      Seq(IvfIncIndex.baseDirFor(dir), IvfIncIndex.deltaDirFor(dir),
-          IvfIncIndex.compactedDirFor(dir))
-        .foreach(p => graft.Lifecycle.deleteRecursively(new java.io.File(p)))
-      IvfIncIndex.ensure(spark, dir) // segments built outside the timings
-      graft.Lifecycle.release(spark)
-      def parts(p: String): Int = Option(new java.io.File(p).listFiles())
-        .map(_.count(_.getName.startsWith("part-"))).getOrElse(0)
-      val segParts = parts(s"${IvfIncIndex.baseDirFor(dir)}/assigned") +
-        parts(s"${IvfIncIndex.deltaDirFor(dir)}/assigned")
-      val (tSeg, nSeg) = time(graft.operators.Similarity.s09.fn(spark, dir).count())
-      val (tFold, cd) = time(IvfIncIndex.ensureCompacted(spark, dir))
-      val (tComp, nComp) = time(graft.operators.Similarity.s10.fn(spark, dir).count())
-      println(f"COMPACT vecs=${e0 * k}%7d segProbe=${tSeg}%6.1fs ($segParts files) " +
-        f"fold=${tFold}%6.1fs compactProbe=${tComp}%6.1fs " +
-        f"(${parts(s"$cd/assigned")} files)")
-      assert(nSeg == nComp, s"compaction changed the probe: $nSeg vs $nComp")
-    }
-
-    // ---- centroid drift: recall counterfactual (r15 slate #3) ----
-    // A shifted-distribution delta slice (+0.75 per component) lands far
-    // from every frozen centroid: the drift monitor must see it
-    // (ratio >> trigger), and the measured consequence is PROBE RECALL
-    // on shifted queries — nprobe cells chosen by the frozen quantizer
-    // miss the shifted neighborhood. The counterfactual is the
-    // generation-2 recluster (fresh fit over the grown corpus): same
-    // probe, recall restored. Truth is the exact brute-force top-3
-    // (annTopK).
-    if (want("drift")) {
-      def time[T](f: => T): (Double, T) = timeReleasing(f)
-      import graft.operators.Similarity
-      import graft.operators.Similarity.IvfIncIndex
-      val k = 48
-      val srcDir = ensureEmbIncReplicas(k)
-      val dir = "/tmp/graft_scale_drift"
-      val mod = IvfIncIndex.NewSliceMod; val rem = IvfIncIndex.NewSliceRem
-      graft.Tables.embeddings(spark, srcDir)
-        .select(col("vec_id"),
-          when(col("vec_id") % mod === rem,
-            transform(col("embedding"), x => x + lit(0.75f)))
-            .otherwise(col("embedding")).as("embedding"),
-          col("label"))
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      Seq(IvfIncIndex.baseDirFor(dir), IvfIncIndex.deltaDirFor(dir),
-          IvfIncIndex.gen2DirFor(dir))
-        .foreach(p => graft.Lifecycle.deleteRecursively(new java.io.File(p)))
-      val ratio = IvfIncIndex.driftRatio(spark, dir)
-      graft.Lifecycle.release(spark)
-      // probe 20 shifted-slice queries through nprobe=4 of 16 cells
-      // against each generation's centroids; truth = exact top-3
-      graft.functions.VectorExpressions.register(spark)
-      // no localCheckpoint here: probeRecall runs for two generations
-      // and a Lifecycle.release between them would free the blocks a
-      // truncated-lineage frame cannot recompute (measured crash:
-      // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) — recompute is cheap at
-      // measurement scale
-      val all = graft.Tables.embeddings(spark, dir)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("embedding"))
-      val queries = all.filter(col("vec_id") % mod === rem).orderBy(col("vec_id"))
-        .limit(20)
-      val truth = Similarity.annTopK(all, "vec_id", "embedding", queries, 3)
-        .select(col("query_id"), col("neighbor_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      // the SHIPPED probe body (Similarity.ivfProbeOn — one code path,
-      // so the recall instrument can never measure a different plan
-      // than the one the gates run; r15 review finding)
-      def probeRecall(cenDir: String): Double = {
-        val cen = spark.read.parquet(s"$cenDir/centroids")
-        val assigned = graft.operators.Similarity.IvfIncIndex.assign(all, cen)
-        val got = graft.operators.Similarity.ivfProbeOn(assigned, cen,
-            _.join(queries.select(col("vec_id")), Seq("vec_id")),
-            estQueries = 20L)
-          .select(col("query_id"), col("neighbor_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        (truth & got).size.toDouble / truth.size
-      }
-      val frozenRecall = probeRecall(IvfIncIndex.baseDirFor(dir))
-      val (tRefit, g2) = time(IvfIncIndex.recluster(spark, dir))
-      val refitRecall = probeRecall(g2)
-      println(f"DRIFT vecs=${e0 * k}%7d ratio=$ratio%.2f (trigger ${IvfIncIndex.ReclusterRatio}) " +
-        f"frozenRecall=$frozenRecall%.3f refit=${tRefit}%6.1fs gen2Recall=$refitRecall%.3f")
-    }
-
-    // ---- hot-cell ANN skew stress (r15 slate #4) ----
-    // The t06 lesson probed on the vector side: HALF the corpus planted
-    // into one tight cluster (one IVF cell), queries drawn so the hot
-    // cell is probed. Where the fan-out lands depends on the plan: the
-    // tiny probed set broadcasts, so the cell JOIN parallelizes over the
-    // scan — the skew risk is the top-k WINDOW exchange, where every
-    // candidate row of a hot-cell query hashes to ONE partition.
-    // Measured via task spread on the s09 plan shape with a 512-query
-    // set (the catalog's 10 fixed queries under-drive the stage).
-    if (want("hotcell")) {
-      import graft.operators.Similarity.IvfIncIndex
-      val k = 192
-      val srcDir = ensureEmbIncReplicas(k)
-      val dir = "/tmp/graft_scale_hotcell"
-      // vec_id % 2 == 0 → a tight cluster around (1,…,1): hash-derived
-      // per-component jitter ≤ 0.01 keeps vectors distinct WITHOUT
-      // smearing the cluster (a first attempt used vec_id·1e-7, which
-      // reaches 19 at replica ids — the "cluster" swallowed the whole
-      // space and every query's own cell was the hot one). Odd ids keep
-      // the organic distribution.
-      graft.Tables.embeddings(spark, srcDir)
-        .select(col("vec_id"),
-          when(col("vec_id") % 2 === 0,
-            transform(col("embedding"), (_, i) =>
-              lit(1.0f) +
-                pmod(xxhash64(col("vec_id") * (i + lit(1))), lit(1000L))
-                  .cast("float") * lit(1e-5f)))
-            .otherwise(col("embedding")).as("embedding"),
-          col("label"))
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      Seq(IvfIncIndex.baseDirFor(dir), IvfIncIndex.deltaDirFor(dir))
-        .foreach(p => graft.Lifecycle.deleteRecursively(new java.io.File(p)))
-      IvfIncIndex.ensure(spark, dir)
-      graft.Lifecycle.release(spark)
-      val cen = spark.read.parquet(s"${IvfIncIndex.baseDirFor(dir)}/centroids")
-      val hist = IvfIncIndex.maintained(spark, dir)
-        .groupBy(col("cell")).count().orderBy(col("count").desc).collect()
-      println(s"HOTCELL cell histogram top3: " +
-        hist.take(3).map(r => s"${r.getInt(0)}:${r.getLong(1)}").mkString(" "))
-      val (tP, nP, maxP, p50P) = spreadOf(spark)(
-        graft.operators.Similarity.probeTopK(spark, dir, 512).count())
-      println(f"HOTCELL vecs=${e0 * k}%7d probe512=${tP}%6.1fs ($nP rows) " +
-        f"maxTask=${maxP}ms p50Task=${p50P}ms")
-      // the index-side remedy: split the dominant cell into
-      // budget-bounded sub-cells, re-probe — the fan-out (and wall)
-      // must fall by the split factor while hot queries still find
-      // their sub-cell. ONE budget value for the delete and the build:
-      // the dir name is budget-salted, so diverging literals would
-      // delete one salted dir and serve a stale publication of the
-      // other (r15 second-pass finding)
-      val refineBudget = 16384L
-      graft.Lifecycle.deleteRecursively(
-        new java.io.File(IvfIncIndex.refinedDirFor(dir, refineBudget)))
-      val t0r = System.nanoTime()
-      val rd = IvfIncIndex.refineHotCells(spark, dir, refineBudget)
-      val tRefine = (System.nanoTime() - t0r) / 1e9
-      graft.Lifecycle.release(spark)
-      val maxCell = spark.read.parquet(s"$rd/assigned")
-        .groupBy(col("cell")).count().agg(max(col("count"))).head().getLong(0)
-      val (tR, nR, maxR, p50R) = spreadOf(spark)(
-        graft.operators.Similarity.probeTopKOver(spark, rd, 512).count())
-      println(f"HOTCELL refined: refine=${tRefine}%6.1fs maxCell=$maxCell " +
-        f"probe512=${tR}%6.1fs ($nR rows) maxTask=${maxR}ms p50Task=${p50R}ms")
-    }
-
-    // ---- composed retrieval at depth (r16, slate #3 done-criterion) ----
-    // s14's IVF-bounded three-stage stack vs s12's flat quantized scan
-    // at 384k vectors: the flat shape's stage 1 scores q × N integer
-    // dots (the documented memory-bound scan); the composed shape
-    // scores only the q × nprobe × cell candidate rows the probe cut
-    // admits. Both end in the identical exact re-rank, so wall + task
-    // spread isolates the candidate-generation shape. Top-3 overlap is
-    // reported as a recall datum (they are DIFFERENT approximations —
-    // the flat scan sees every cell, the probe only nprobe of them;
-    // RecallProbe pins both against exact at gate scale).
-    if (want("rerank")) {
-      import graft.operators.Similarity
-      import graft.operators.Similarity.IvfIncIndex
-      val k = 192
-      val dir = ensureEmbIncReplicas(k)
-      // serving precondition both arms ride outside the timing: the
-      // published IVF index (s14's stage 1; s12 pays no index at all)
-      IvfIncIndex.ensure(spark, dir)
-      graft.Lifecycle.release(spark)
-      def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
-        df.select(col("query_id"), col("neighbor_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-      var flat = Set.empty[(Long, Long)]
-      val (tFlat, _, maxF, p50F) = spreadOf(spark) {
-        flat = pairs(Similarity.s12.fn(spark, dir)); flat.size.toLong
-      }
-      var comp = Set.empty[(Long, Long)]
-      val (tComp, _, maxC, p50C) = spreadOf(spark) {
-        comp = pairs(Similarity.s14.fn(spark, dir)); comp.size.toLong
-      }
-      println(f"RERANK vecs=${e0 * k}%7d flat_s12=${tFlat}%6.1fs " +
-        f"(maxTask=${maxF}ms p50=${p50F}ms) composed_s14=${tComp}%6.1fs " +
-        f"(maxTask=${maxC}ms p50=${p50C}ms) top3_overlap=${(flat & comp).size}/${flat.size}")
-    }
-
-    // ---- retraction at depth (r16: the delete arm's scale claim) ----
-    // c07's Scaladoc claims retraction is metadata-sized: an anti-join
-    // of the published pair state against a tombstone set, never a
-    // re-pairing. Measure it against the counterfactual a
-    // retraction-less deployment pays — re-building the pair index
-    // over the reduced corpus from scratch — at the 125k-doc replica
-    // depth (the RING-LOOP corpus). Warm both arms' inputs (band index
-    // + published resident pairs) outside the timing, the deployment
-    // shape.
-    if (want("retract")) {
-      import graft.operators.TextDedup
-      val k = 25
-      val dir = s"/tmp/graft_scale_v2_${k}x"
-      if (!new java.io.File(s"$dir/documents.parquet").isDirectory) {
-        println("RETRACT: build the v2 corpus first (tools.RingSpill 25 auto)")
-      } else {
-        spark.conf.set("spark.graft.bands.mode", "persisted")
-        val pairs = TextDedup.ResidentPairIndex.ensure(spark, dir)
-        pairs.count() // publish + file-cache warm, outside the timing
-        graft.Lifecycle.release(spark)
-        val docs = graft.Tables.documents(spark, dir)
-        val tombs = docs.filter(col("doc_id") % 17 === 3).select(col("doc_id"))
-        val (tRetract, nLive) = timeReleasing(
-          TextDedup.retractPairs(pairs, tombs).count())
-        // counterfactual: re-pair the SAME reduced corpus from scratch
-        // (band build + LSH + verify — what a deployment without the
-        // retraction identity re-pays per takedown batch). Resident
-        // slice on both arms, so equal pair counts also re-check the
-        // retraction identity at depth.
-        val live = docs.filter(col("doc_id") % 10 =!= 7 && col("doc_id") % 17 =!= 3)
-        val (tRebuild, nRebuilt) = timeReleasing(
-          TextDedup.dedupNearPairs(live, "doc_id", "text").count())
-        println(f"RETRACT docs=${docs.count()}%7d retract=${tRetract}%6.1fs " +
-          f"($nLive pairs) rebuild=${tRebuild}%6.1fs ($nRebuilt pairs) " +
-          f"identity=${nLive == nRebuilt} ratio=${tRebuild / tRetract}%.1fx")
-      }
-    }
-
-    // ---- incremental clustering at depth (r16: t35's scale claim) ----
-    // t35 recomputes connected components only over the delta's cluster
-    // neighborhood and splices the rest; t11 re-clusters the whole
-    // corpus. Warm both pair indexes (and the resident label table)
-    // with one untimed pass of each gate fn, then time the steady-state
-    // nightly shapes: the incremental pass still pays its LIVE work
-    // (delta band probe + verify + subgraph CC + splice), the batch
-    // pass reads the warm pair index and runs corpus-wide CC.
-    if (want("ccdelta")) for (dir <- Seq(
-        // BOTH replica shapes — they bracket the claim: the decorrelated
-        // v2 corpus (disjoint replicas, ~4.7k pairs — full re-pairing
-        // from warm bands is trivially cheap, the incremental arm's
-        // WORST case) and the correlated corpus (k-cliques, ~1.3M pairs
-        // — the dense dup structure where corpus-wide work bites)
-        "/tmp/graft_scale_v2_25x", "/tmp/graft_scale_25x")) {
-      if (!new java.io.File(s"$dir/documents.parquet").isDirectory) {
-        println(s"CCDELTA: corpus $dir missing (tools.RingSpill / growth build it)")
-      } else {
-        spark.conf.set("spark.graft.bands.mode", "persisted")
-        graft.operators.Corpus.t11.fn(spark, dir).count() // warm band/file caches
-        graft.Lifecycle.release(spark)
-        graft.operators.Corpus.t35.fn(spark, dir).count() // warm: labels + resident pairs
-        graft.Lifecycle.release(spark)
-        // the TRUE non-incremental nightly: the corpus changed, so the
-        // full pair index must REBUILD before corpus-wide CC can run —
-        // delete its publication so t11 pays both stages (an earlier
-        // draft timed CC over a WARM full index and the incremental arm
-        // "lost" 12.5s to 1.8s by skipping the 38s the batch arm didn't
-        // pay; that number was the instrument, not the operator)
-        // min-of-3 per arm (the PLANS deep-timing protocol: single-shot
-        // deep timings swing ~2-4x between windows on this host), arms
-        // interleaved so a spike charges both
-        var (tFull, tInc) = (Double.MaxValue, Double.MaxValue)
-        var (nFull, nInc) = (0L, 0L)
-        for (_ <- 1 to 3) {
-          graft.Lifecycle.deleteRecursively(new java.io.File(
-            graft.operators.TextDedup.PairIndex.indexDirFor(dir)))
-          val (tF, nF) = timeReleasing(
-            graft.operators.Corpus.t11.fn(spark, dir).count())
-          // the incremental nightly: delta band probe + verify (t35 now
-          // reads the persisted DeltaPairIndex — r17 — so its build is
-          // wiped per iteration to keep the arm paying the LIVE delta,
-          // symmetric with the full arm's PairIndex wipe) + subgraph CC
-          // + label splice, over the warm published resident state
-          graft.Lifecycle.deleteRecursively(new java.io.File(
-            graft.operators.TextDedup.DeltaPairIndex.indexDirFor(dir)))
-          val (tI, nI) = timeReleasing(
-            graft.operators.Corpus.t35.fn(spark, dir).count())
-          tFull = math.min(tFull, tF); nFull = nF
-          tInc = math.min(tInc, tI); nInc = nI
-        }
-        println(f"CCDELTA dir=$dir repairAndCc=${tFull}%6.1fs ($nFull labeled) " +
-          f"incremental=${tInc}%6.1fs ($nInc labeled) " +
-          f"identity=${nFull == nInc} ratio=${tFull / tInc}%.1fx")
-      }
-    }
-
-    // ---- batched vs one-at-a-time BPE (r16 VERDICT slate #4) ----
-    // v05 collects ONE argmax row per merge round: correct semantics
-    // pin, but a 32k-merge vocabulary = 32k sequential driver
-    // round-trips. v07's batch rule amortizes B merges per round-trip.
-    // Time learning 24 merges both ways at the 125k-doc replica depth
-    // (the tables differ where batched skips a blocked pair — this row
-    // is the COST claim; the semantics are each gate's own oracle).
-    if (want("bpe")) {
-      import graft.operators.Advanced
-      val dir = ensureDocsReplicas(25)
-      val (tSeq, nSeq) = timeReleasing(Advanced.bpeTrain(spark, dir, 24)._1.size)
-      val (tBat, nBat) = timeReleasing(Advanced.bpeTrainBatched(spark, dir)._1.size)
-      println(f"BPE docs=125k oneAtATime(24 rounds)=${tSeq}%6.1fs ($nSeq merges) " +
-        f"batched(3x8)=${tBat}%6.1fs ($nBat merges) ratio=${tSeq / tBat}%.1fx")
-      // the realistic-vocab direction: B=64 over a 256-deep window for
-      // 8 rounds targets ~512 merges — the regime where one-at-a-time
-      // (one driver round-trip per merge) stops being a trainer at all
-      val (tBig, nBig) = timeReleasing(
-        Advanced.bpeTrainBatched(spark, dir, rounds = 8, b = 64, window = 256)._1.size)
-      println(f"BPE docs=125k batched(8x64, window 256)=${tBig}%6.1fs ($nBig merges, " +
-        f"${tBig / math.max(nBig, 1)}%.3fs/merge vs ${tSeq / math.max(nSeq, 1)}%.3fs/merge one-at-a-time)")
-    }
-
     // ---- soak-ring N-night cost curve (r16 VERDICT slate #1) ----
     // c08's claim: per-night cost after night 0 is ∝ the slice (band
     // probe) or the pair set (fold/retract), never ∝ the corpus. Time
@@ -1067,8 +168,7 @@ object ScaleSmoke {
       println(s"SOAK docs=125k nights: ${curve.mkString(" ")} " +
         s"foldDue=${SoakRing.foldDue(dir)}")
       // restore the session default so later sections in the same
-      // invocation measure under it (r17 ADVICE — matches the
-      // bandmode section's convention)
+      // invocation measure under it
       spark.conf.set("spark.graft.bands.mode", "auto")
     }
 
@@ -1077,13 +177,12 @@ object ScaleSmoke {
     // clique-of-cliques: 20-doc groups of IDENTICAL docs (cliques),
     // consecutive groups overlapping at Jaccard ≈ 0.667 (chain links) —
     // 62.5k docs, ~1.8M pairs, diameter ~3.1k hops. Plain hash-min
-    // label propagation iterates ∝ diameter (3.1k rounds of
-    // corpus-label shuffles — measured here only to an aborted round
-    // cap); the pointer-jump shortcut converges ∝ log diameter. Also
-    // times the keep-mask dominator calculus over the giant
-    // component's pair neighborhood (the other consumer the VERDICT
-    // named). The other half of the corpus is pair-free singletons, so
-    // the component genuinely holds 50% of docs.
+    // label propagation would iterate ∝ diameter (it aborted at a
+    // 40-round cap, PLANS.md r17); the pointer-jump shortcut converges
+    // ∝ log diameter. Also times the keep-mask dominator calculus over
+    // the giant component's pair neighborhood, the other consumer of a
+    // giant component. The other half of the corpus is pair-free
+    // singletons, so the component genuinely holds 50% of docs.
     if (want("ccskew")) {
       import graft.operators.{Corpus, TextDedup}
       val dir = "/tmp/graft_scale_ccskew"
@@ -1106,8 +205,8 @@ object ScaleSmoke {
           .repartition(32)
           .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       }
-      // the pair artifact is the precondition both CC arms read — build
-      // and time it once, outside the arm timings (the nightly split)
+      // the pair artifact is the precondition CC reads — build and time
+      // it once, outside the CC timing (the nightly split)
       val (tPairs, nPairs) = timeReleasing(
         TextDedup.PairIndex.ensure(spark, dir).count())
       def und() = {
@@ -1126,8 +225,9 @@ object ScaleSmoke {
         spark.sparkContext.addSparkListener(l)
         try {
           val (t, n) = timeReleasing(f)
-          // deterministic drain barrier, not a sleep (r20 VERDICT: the
-          // r19 fix landed in metered()/spreadOf but missed this site)
+          // deterministic drain barrier, not a sleep: on large jobs the
+          // async bus can still be delivering task-end events past any
+          // fixed wait
           org.apache.spark.GraftListenerBus.drain(spark.sparkContext, 30000L)
           (t, n, bytes.get())
         }
@@ -1135,24 +235,6 @@ object ScaleSmoke {
       }
       val (tCc, nCc, shCc) = shuffled(Corpus.connectedComponents(und()).count())
       val roundsShort = Corpus.lastRounds
-      spark.conf.set("spark.graft.cc.shortcut", "off")
-      spark.conf.set("spark.graft.cc.maxRounds", "40")
-      // round-granular stepping pinned for the counterfactual (the
-      // default is already 1, but this arm's rounds count and 40-round
-      // abort must stay r17-comparable even if the default moves)
-      spark.conf.set("spark.graft.cc.roundsPerSync", "1")
-      val t0p = System.nanoTime()
-      val outcome =
-        try {
-          val n = Corpus.connectedComponents(und()).count()
-          f"converged ${Corpus.lastRounds} rounds ($n labeled) in ${(System.nanoTime() - t0p) / 1e9}%.1fs"
-        } catch { case _: IllegalStateException =>
-          f"ABORTED at 40 rounds after ${(System.nanoTime() - t0p) / 1e9}%.1fs (diameter ~3.1k → ~3.1k rounds to converge)"
-        }
-      spark.conf.unset("spark.graft.cc.shortcut")
-      spark.conf.unset("spark.graft.cc.maxRounds")
-      spark.conf.unset("spark.graft.cc.roundsPerSync")
-      graft.Lifecycle.release(spark)
       val batch = graft.Tables.documents(spark, dir)
         .filter(col("doc_id") % 10 === 7).select(col("doc_id"))
       val (tKeep, nKeep) = timeReleasing(
@@ -1160,342 +242,12 @@ object ScaleSmoke {
           .filter(col("keep")).count())
       println(f"CCSKEW docs=${2 * half} pairs=$nPairs (build ${tPairs}%6.1fs) " +
         f"shortcutCC=${tCc}%6.1fs rounds=$roundsShort ($nCc labeled, " +
-        f"shuffle=${shCc / 1048576}MB) plainCC=$outcome " +
+        f"shuffle=${shCc / 1048576}MB) " +
         f"keepMask=${tKeep}%6.1fs ($nKeep kept)")
     }
 
-    // ---- deep skew stress (r14 slate #4) ----
-    // A deliberately skewed corpus at scale: every doc's text is made
-    // replica-disjoint by PREFIXING each token with the replica id
-    // (shingle df distribution per replica stays exactly the original
-    // corpus's; cross-replica shingles never collide — NOT the
-    // interleave trick, whose "rI tok rI" shingles inherit TOKEN
-    // frequency and mint dozens of df~4000 keys, swamping the planted
-    // one; first attempt, measured: direct 716s/maxTask 517s vs hatched
-    // 321s/279s — a 2.2x hatch win on an unintended multi-hot-key
-    // distribution, kept in PLANS.md as a bonus datum). Then ONE hot
-    // phrase is planted in 1/8 of all docs — df 7500, >>250x the
-    // organic tail. The direct plan lands each hot shingle's ~7M-pair
-    // fan-out on ONE key group; the stats-gated hatch (t06 default)
-    // spreads it over HotBlocks keys. Measured: wall + max/p50 task
-    // (the straggler signal), identical pair counts.
-    if (want("skewdeep")) {
-      val k = 12
-      val skewDir = "/tmp/graft_scale_skewdeep3"
-      if (!new java.io.File(s"$skewDir/documents.parquet").isDirectory) {
-        val copies = (0 until k).map { i =>
-          base.select((col("doc_id") + lit(i.toLong * 1000000L)).as("doc_id"),
-            regexp_replace(col("text"), lit("(\\S+)"), lit(s"r$i$$1")).as("text"),
-            col("lang"), col("source"), col("n_chars"))
-        }
-        copies.reduce(_ unionAll _)
-          .select(col("doc_id"),
-            when(pmod(col("doc_id"), lit(8)) === 3,
-              concat(col("text"), lit(" zzqq hot common boiler plate phrase")))
-              .otherwise(col("text")).as("text"),
-            col("lang"), col("source"), col("n_chars"))
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$skewDir/documents.parquet")
-      }
-      val nDocs = spark.read.parquet(s"$skewDir/documents.parquet").count()
-      // publish the stats profile OUTSIDE the timed region: it is the
-      // once-per-corpus-snapshot artifact a deployment refreshes with
-      // its other table stats, not part of the per-query cost under test
-      graft.operators.TextDedup.HotShingleProfile.ensureBoth(spark, skewDir)
-      graft.Lifecycle.release(spark)
-      val (tD, nD, maxD, p50D) = spreadOf(spark)(
-        graft.operators.TextDedup.jaccardPairsDirect(spark, skewDir).count())
-      val (tH, nH, maxH, p50H) = spreadOf(spark)(
-        graft.operators.TextDedup.t06.fn(spark, skewDir).count())
-      println(f"SKEW-DEEP docs=$nDocs%7d direct=${tD}%6.1fs ($nD pairs) " +
-        f"maxTask=${maxD}ms p50Task=${p50D}ms")
-      println(f"SKEW-DEEP docs=$nDocs%7d hatched=${tH}%6.1fs ($nH pairs) " +
-        f"maxTask=${maxH}ms p50Task=${p50H}ms")
-      assert(nD == nH, s"skew hatch changed the pair count: $nD vs $nH")
-    }
-    // ---- one order of magnitude up: 1.25M docs / 3.8M vectors ----
-    // (r17 VERDICT slate #2) All prior depth evidence tops out at ~125k
-    // docs / 384k vectors. Run the headline families at ~10x, recording
-    // the things structure alone can't prove: which verify-join tier
-    // actually fires (the sort-merge tier had never run in anger), CC
-    // rounds on a planted chain, shuffle bytes, and peak per-task
-    // execution memory. Numbers -> PLANS.md MEGA table.
-    /** The 1.25M-doc fixture at /tmp/graft_scale_megadocs —
-      * REPLICA-DISJOINT text (every token prefixed with its replica id,
-      * the skewdeep trick): cross-replica shingles never collide, so
-      * pair density stays LINEAR in corpus size — the realistic 10x
-      * shape. The suffix-replica builder (ensureDocsReplicas) puts
-      * every doc in a k-clique: pair count grows ~k^2/2 per group, and
-      * at k=250 the soak's night-0 verify join spilled past 59 GB of
-      * /tmp before dying — a FIXTURE artifact (a 10x-bigger real crawl
-      * does not have 10x-bigger dup groups), measured and kept in
-      * PLANS.md as the quadratic-fixture caveat. doc_id remap is
-      * +i*1e6, so the %10 slice conventions survive per replica. ONE
-      * builder shared by `mega` and `mediamega`. */
-    def ensureMegaDocs(k: Int = 250): String = {
-      val dir = "/tmp/graft_scale_megadocs"
-      if (!new java.io.File(s"$dir/documents.parquet").isDirectory) {
-        (0 until k).map { i =>
-          if (i == 0) base
-          else base.select(
-            (col("doc_id") + lit(i.toLong * 1000000L)).as("doc_id"),
-            regexp_replace(col("text"), lit("(\\S+)"), lit(s"r$i$$1")).as("text"),
-            col("lang"), col("source"), col("n_chars"))
-        }.reduce(_ unionAll _)
-          .repartition(64)
-          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      }
-      dir
-    }
-
-    if (want("mega")) {
-      import graft.operators.{Corpus, Similarity, TextDedup}
-      val k = 250 // 5k docs x 250 = 1.25M
-      val dir = ensureMegaDocs(k)
-      spark.conf.set("spark.graft.bands.mode", "persisted")
-      // fresh artifacts: this measures builds, not warm reads
-      Seq(TextDedup.BandIndex.indexDirFor(dir), TextDedup.PairIndex.indexDirFor(dir))
-        .foreach(p => graft.Lifecycle.deleteRecursively(new java.io.File(p)))
-      val (tSig, nSig, shSig, pkSig) = metered(TextDedup.BandIndex.ensure(spark, dir).count())
-      println(f"MEGA docs=${n0 * k} sigBuild=${tSig}%7.1fs ($nSig sigs, " +
-        f"shuffle=${shSig / 1048576}MB, peakTask=${pkSig / 1048576}MB)")
-      TextDedup.SoakRing.wipe(dir)
-      (0 to 4).foreach { night =>
-        // reset per night: a night whose arm builds no verify join
-        // (fold/retract) must not inherit the prior night's tier label
-        // (r18 review)
-        TextDedup.lastVerifyTier = "none"
-        val (t, n, sh, pk) = metered(TextDedup.SoakRing.served(spark, dir, night).count())
-        println(f"MEGA soak n$night=${t}%7.1fs ($n pairs, shuffle=${sh / 1048576}MB, " +
-          f"peakTask=${pk / 1048576}MB, verifyTier=${TextDedup.lastVerifyTier})")
-      }
-      spark.conf.set("spark.graft.bands.mode", "auto")
-      // the tier calculus's derived breakeven on THIS session's
-      // geometry: sort-merge fires when perPartBuild = 4 x
-      // max(est/parts, min(est, 64MB advisory)) exceeds half a task's
-      // execution share — print the est where that flips, so the tier
-      // observation above has its scale context even when SHJ fires
-      locally {
-        val parts = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-        val taskShare = (Runtime.getRuntime.maxMemory() *
-          spark.conf.get("spark.memory.fraction", "0.6").toDouble /
-          math.max(spark.sparkContext.defaultParallelism, 1)).toLong
-        // the ONE cap parser (IndexStore.broadcastCapBytes) — the first
-        // draft here re-parsed the conf and threw on the standard "-1"
-        // disable form (r18 review)
-        val cap = graft.operators.IndexStore.broadcastCapBytes(spark)
-        // Mirror verifyJaccardOf's calculus EXACTLY, including the AQE
-        // advisory floor the first draft ignored (r18 review): SHJ needs
-        // est <= cap*parts AND 4 x max(est/parts, min(est, advisory)) <=
-        // taskShare/2. With thr = taskShare/8, the build bound flips at
-        // thr*parts when advisory <= thr (the est/parts term governs) and
-        // at thr itself otherwise (any est past thr rides the advisory
-        // floor into a coalesced task) — on this box advisory(64MB) > thr,
-        // so the ADVISORY bound binds far below cap*parts.
-        val aqeCoalesce =
-          spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean &&
-            spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true").toBoolean
-        val advisory = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"))
-        val thr = taskShare / 2 / 4
-        val estBuildBound =
-          if (!aqeCoalesce) thr * parts
-          else if (advisory <= thr) thr * parts
-          else thr
-        val mergeAtEst =
-          if (cap <= 0) 0L else math.min(cap * parts, estBuildBound)
-        val corpusBytes = Option(
-          new java.io.File(s"$dir/documents.parquet").listFiles())
-          .map(_.map(_.length()).sum).getOrElse(-1L)
-        println(f"MEGA tier-calculus: corpus=${corpusBytes / 1048576}MB " +
-          f"(est ~4x = ${corpusBytes * 4 / 1048576}MB), SHJ->merge " +
-          f"breakeven est=${mergeAtEst / 1048576}MB " +
-          f"(cap*parts=${cap * parts / 1048576}MB, " +
-          f"build bound=${estBuildBound / 1048576}MB" +
-          f"${if (aqeCoalesce && advisory > thr) " - advisory floor binds" else ""})")
-      }
-      // giant-component CC at 10x the ccskew depth: half the corpus in
-      // ONE chained clique-of-cliques component (diameter ~31k hops)
-      locally {
-        val ccDir = "/tmp/graft_scale_ccskew_mega"
-        val half = 625000L
-        if (!new java.io.File(s"$ccDir/documents.parquet").isDirectory) {
-          spark.range(0, 2 * half).select(
-            col("id").as("doc_id"),
-            when(col("id") < half,
-              expr("array_join(transform(sequence(0, 29), " +
-                "j -> concat('c', (id div 20) * 6 + j)), ' ')"))
-              .otherwise(
-                expr("array_join(transform(sequence(0, 9), " +
-                  "j -> concat('u', id, 'x', j)), ' ')"))
-              .as("text"),
-            lit("en").as("lang"), lit("synthetic").as("source"))
-            .withColumn("n_chars", length(col("text")).cast("long"))
-            .repartition(32)
-            .write.mode("overwrite").parquet(s"$ccDir/documents.parquet")
-        }
-        val (tPairs, nPairs, shP, pkP) = metered(
-          TextDedup.PairIndex.ensure(spark, ccDir).count())
-        val p = TextDedup.PairIndex.ensure(spark, ccDir)
-          .select(col("doc1"), col("doc2"))
-        val und = p.select(col("doc1").as("src"), col("doc2").as("dst"))
-          .unionByName(p.select(col("doc2").as("src"), col("doc1").as("dst")))
-        val (tCc, nCc, shCc, pkCc) = metered(Corpus.connectedComponents(und).count())
-        println(f"MEGA ccskew docs=${2 * half} pairs=$nPairs (${tPairs}%7.1fs, " +
-          f"shuffle=${shP / 1048576}MB) cc=${tCc}%7.1fs rounds=${Corpus.lastRounds} " +
-          f"($nCc labeled, shuffle=${shCc / 1048576}MB, peakTask=${pkCc / 1048576}MB)")
-      }
-      // vector side: 3.84M vectors through base fit + delta grow + the
-      // composed 3-stage serve (s14)
-      locally {
-        val vk = 2000 // 2k vecs x 2000 = 4M — 10.4x the prior 384k depth
-        val vdir = ensureEmbIncReplicas(vk)
-        import graft.operators.Similarity.IvfIncIndex
-        Seq(IvfIncIndex.baseDirFor(vdir), IvfIncIndex.deltaDirFor(vdir),
-          IvfIncIndex.compactedDirFor(vdir))
-          .foreach(p => graft.Lifecycle.deleteRecursively(new java.io.File(p)))
-        val (tBase, _, shB, pkB) = metered(IvfIncIndex.ensureBase(spark, vdir))
-        val (tDelta, _, _, _) = metered(IvfIncIndex.ensureDelta(spark, vdir))
-        val (tServe, nServe, shS, pkS) = metered(Similarity.s14.fn(spark, vdir).count())
-        println(f"MEGA vecs=${e0 * vk} base=${tBase}%7.1fs (shuffle=${shB / 1048576}MB, " +
-          f"peakTask=${pkB / 1048576}MB) delta=${tDelta}%6.1fs " +
-          f"s14serve=${tServe}%7.1fs ($nServe rows, shuffle=${shS / 1048576}MB, " +
-          f"peakTask=${pkS / 1048576}MB)")
-      }
-    }
-
-    // ---- v07 dominance-filter survivor yield at real geometry ----
-    // (r17 VERDICT slate #4) The gate runs B=8/window=32; nothing yet
-    // shows the yield doesn't collapse at depth (if most of a wide
-    // window mutually conflicts, batching stalls back toward v05's
-    // one-merge-per-round-trip). Train at B=256/window=1024 to
-    // exhaustion (capped), printing survivors per driver round-trip.
-    if (want("bpeyield")) {
-      import graft.operators.Advanced
-      val dir = ensureDocsReplicas(25)
-      val (t, merges) = timeReleasing(
-        Advanced.bpeTrainBatched(spark, dir, rounds = 32, b = 256, window = 1024)._1)
-      val byRound = merges.groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (r, ms) => s"r$r=${ms.size}" }
-      println(f"BPE-YIELD docs=125k B=256 window=1024 total=${merges.size} merges " +
-        f"in ${byRound.size} round-trips (${t}%6.1fs): ${byRound.mkString(" ")}")
-    }
-
-    // ---- media kernel at 10x depth (r18 VERDICT slate #2) ----
-    // decode+pHash is the media family's one corpus-shaped pass; text
-    // sig-build and vector fit have 10x rows in PLANS r18-7, the media
-    // kernel did not. Measures the production ring's own arms at 1.25M
-    // payload docs: resident build (9/10 of the corpus through the
-    // kernel), slice delta (1/10), the exact verdict over the served
-    // artifact (warm read + one hash shuffle), and mm08's banded
-    // hamming matcher — whose keyspace bound (distinct hashes <= 2^16
-    // however big the corpus) is exactly the claim depth should test.
-    if (want("mediamega")) {
-      import graft.operators.Multimodal
-      val dir = ensureMegaDocs()
-      Seq(Multimodal.MediaIndex.baseDirFor(dir),
-          Multimodal.MediaIndex.deltaDirFor(dir))
-        .foreach(p => graft.Lifecycle.deleteRecursively(new java.io.File(p)))
-      val (tBase, _, shB, pkB) = metered(Multimodal.MediaIndex.ensureBase(spark, dir))
-      val (tDelta, _, shD, pkD) = metered(Multimodal.MediaIndex.ensureDelta(spark, dir))
-      val (tVer, nGroups, shV, pkV) = metered(
-        Multimodal.MediaIndex.maintained(spark, dir)
-          .groupBy(col("phash"))
-          .agg(min(col("id")).as("keep_id"), count(lit(1)).as("n_media"))
-          .count())
-      val (tNear, nNear, shN, pkN) = metered(
-        Multimodal.MediaIndex.nearDupKeepers(
-          Multimodal.MediaIndex.maintained(spark, dir)).count())
-      println(f"MEGA media docs=1.25M base=${tBase}%7.1fs (shuffle=${shB / 1048576}MB, " +
-        f"peakTask=${pkB / 1048576}MB) delta=${tDelta}%6.1fs (shuffle=${shD / 1048576}MB, " +
-        f"peakTask=${pkD / 1048576}MB)")
-      println(f"MEGA media verdict=${tVer}%6.1fs ($nGroups hash groups, " +
-        f"shuffle=${shV / 1048576}MB, peakTask=${pkV / 1048576}MB) " +
-        f"near=${tNear}%6.1fs ($nNear keepers, shuffle=${shN / 1048576}MB, " +
-        f"peakTask=${pkN / 1048576}MB)")
-      // ---- 64-bit width (r19 VERDICT slate #1): the distinct-hash set
-      // is CORPUS-proportional here, so this row prices what the 16-bit
-      // family's keyspace bound hid — distinct hashes, BANDED candidate
-      // volume (the matcher's real pair-comparison count, from the same
-      // bandedCandidates body the matcher runs), verified radius edges,
-      // wall, and which tier the measured-bytes gate picked per join.
-      locally {
-        Seq(Multimodal.WideMediaIndex.baseDirFor(dir),
-            Multimodal.WideMediaIndex.deltaDirFor(dir))
-          .foreach(p => graft.Lifecycle.deleteRecursively(new java.io.File(p)))
-        val (tB64, _, shB64, _) = metered(Multimodal.WideMediaIndex.ensureBase(spark, dir))
-        val (tD64, _, _, _) = metered(Multimodal.WideMediaIndex.ensureDelta(spark, dir))
-        val estRows = Multimodal.WideMediaIndex.estRowsFor(dir)
-        val perHash = Multimodal.WideMediaIndex.maintained(spark, dir)
-          .groupBy(col("phash")).agg(min(col("id")).as("min_id"))
-          .localCheckpoint()
-        val nHash = perHash.count()
-        val (tCand, nCand, shC, pkC) = metered(
-          Multimodal.WideMediaIndex.bandedCandidates(spark, perHash, estRows).count())
-        val candTier = Multimodal.WideMediaIndex.lastTier
-        val (tNear64, nKeep64, shN64, pkN64) = metered(
-          Multimodal.WideMediaIndex.nearDupKeepers(spark,
-            Multimodal.WideMediaIndex.maintained(spark, dir), estRows).count())
-        println(f"MEGA media64 docs=1.25M(+twins) base=${tB64}%6.1fs " +
-          f"(shuffle=${shB64 / 1048576}MB) delta=${tD64}%6.1fs " +
-          f"distinctHashes=$nHash estRows=$estRows")
-        println(f"MEGA media64 candidates=$nCand (${tCand}%6.1fs, " +
-          f"shuffle=${shC / 1048576}MB, peakTask=${pkC / 1048576}MB, " +
-          f"tier=$candTier) near=${tNear64}%6.1fs ($nKeep64 keepers, " +
-          f"shuffle=${shN64 / 1048576}MB, peakTask=${pkN64 / 1048576}MB, " +
-          f"tier=${Multimodal.WideMediaIndex.lastTier})")
-        // chain clustering at depth: CC over the verified radius-4
-        // edges — rounds ∝ log chain length over the distinct-hash
-        // vertex set; prices mm12's one extra cost vs the one-hop row
-        val (tChain, nChain, shCh, pkCh) = metered(
-          Multimodal.WideMediaIndex.chainKeepers(spark,
-            Multimodal.WideMediaIndex.maintained(spark, dir), estRows).count())
-        println(f"MEGA media64 chain=${tChain}%6.1fs ($nChain keepers, " +
-          f"ccRounds=${graft.operators.Corpus.lastRounds}, " +
-          f"shuffle=${shCh / 1048576}MB, peakTask=${pkCh / 1048576}MB, " +
-          f"tier=${Multimodal.WideMediaIndex.lastTier})")
-      }
-    }
-
-    // ---- v07 survivor yield on a FLAT pair distribution ----
-    // (r18 VERDICT slate #6) The r17/r18 bpeyield bracket showed yield
-    // collapsing to 1-11/round on CHAINED text and ASSERTED — unmeasured
-    // — that a wide flat pair distribution is where large B pays. This
-    // fixture realizes that distribution exactly: M two-char words over
-    // DISJOINT symbol pairs (word i = chars 0x4E00+2i, 0x4E00+2i+1), so
-    // no two window candidates share a symbol and the dominance filter
-    // is recall-free; counts are uniform by round-robin construction.
-    // Yield per driver round-trip should track B until the vocabulary
-    // drains — substantiating (or refuting) the claim at both B tiers.
-    if (want("bpeflat")) {
-      import graft.operators.Advanced
-      val m = 2048
-      val dir = "/tmp/graft_scale_bpeflat"
-      if (!new java.io.File(s"$dir/documents.parquet").isDirectory) {
-        import spark.implicits._
-        def word(i: Int): String =
-          new String(Array((0x4E00 + 2 * i).toChar, (0x4E00 + 2 * i + 1).toChar))
-        val rows = (0 until 5000).map { j =>
-          val text = (0 until 20).map(i => word((j * 20 + i) % m)).mkString(" ")
-          (j.toLong, text, "zz", "synthetic", text.length.toLong)
-        }
-        rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-          .repartition(8)
-          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      }
-      Seq(64, 256).foreach { b =>
-        val (t, merges) = timeReleasing(
-          Advanced.bpeTrainBatched(spark, dir, rounds = 12, b = b,
-            window = 1024)._1)
-        val byRound = merges.groupBy(_._1).toSeq.sortBy(_._1)
-          .map { case (r, ms) => s"r$r=${ms.size}" }
-        println(f"BPE-FLAT words=$m B=$b window=1024 total=${merges.size} merges " +
-          f"in ${byRound.size} round-trips (${t}%6.1fs): ${byRound.mkString(" ")}")
-      }
-    }
-
     // ---- stream-stream join hot-key adversary (r17 VERDICT slate #6) ----
-    // st04's join has no skew bracket (batch side has ccskew/hot-cell/
+    // st04's join has no skew bracket (the batch side has ccskew and
     // salting evidence). Plant ONE user holding 25% of all events and
     // drain the same viewClickJoin plan st04 ships, recording state-store
     // rows, per-batch wall, and output size vs the un-skewed corpus of

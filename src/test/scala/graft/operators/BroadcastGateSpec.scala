@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
   * The contract under test: the decision follows the MEASURED payload
   * vs the session's `autoBroadcastJoinThreshold` (not row counts, not
   * Catalyst's compressed-file stats), and the oversized fallback
-  * ACTIVELY suppresses a planner broadcast (the SpillSmoke r13 failure
+  * ACTIVELY suppresses a planner broadcast (the starved-heap failure
   * mode: stats said broadcastable, the in-memory hash relation was
   * not). */
 class BroadcastGateSpec extends SparkSpec {
@@ -71,14 +71,14 @@ class BroadcastGateSpec extends SparkSpec {
   }
 
   test("verify join tiers by measured bytes: broadcast, then SHUFFLE_HASH, then MERGE") {
-    // the r16 slate-#4 gate on verifyJaccardOf's sets sides, tiered by
-    // the corpus's MEASURED bytes (never planner stats — the r15
-    // Night0Diag class broadcast corpus-sized text-payload sides off
-    // stacked selectivity estimates): explicit broadcast below the
-    // session cap (the r16 HintAB win); SHUFFLE_HASH while the
+    // the gate on verifyJaccardOf's sets sides, tiered by the corpus's
+    // MEASURED bytes (never planner stats — stacked selectivity
+    // estimates broadcast corpus-sized text-payload sides): explicit
+    // broadcast below the session cap (measured faster than an
+    // unconditional SHUFFLE_HASH); SHUFFLE_HASH while the
     // per-partition build provably fits (Spark's cap × partitions
-    // calculus AND a task-share bound — SHJ builds cannot spill, the
-    // RingSpill 2 GB failure); sort-merge past that, the only
+    // calculus AND a task-share bound — SHJ builds cannot spill, a
+    // 2 GB heap measured the failure); sort-merge past that, the only
     // unconditionally spill-safe shape. Threshold manipulated over ONE
     // corpus, so each flip is PROVABLY the gate, not data size.
     val sf = "/root/testdata/sf0.001"
@@ -100,7 +100,7 @@ class BroadcastGateSpec extends SparkSpec {
     // fixture regeneration would flip the test (r16 review).
     val bigCap = verifyPlans("64MB") // est ≤ cap: broadcast
     assert(bigCap.exists(_.isInstanceOf[BroadcastExchangeLike]),
-      "under the cap the sets sides should broadcast (the HintAB win)")
+      "under the cap the sets sides should broadcast")
     val midCap = verifyPlans("128KB") // cap < est ≤ cap × parts, build fits
     assert(midCap.exists(_.isInstanceOf[ShuffledHashJoinExec]),
       "mid tier should pin SHUFFLE_HASH")

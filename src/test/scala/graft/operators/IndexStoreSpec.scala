@@ -1,13 +1,14 @@
 package graft.operators
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
+import org.apache.spark.sql.functions.lit
 
 /** The publication/staleness contract shared by every persisted index
   * (IVF centroids, LSH signatures, near-dup pairs). Rebuild-on-corpus-
   * regeneration is pinned per index in OperatorsSpec; this spec pins
-  * the store machinery itself: reuse, torn-build recovery, and the
-  * racing-builder convergence path. */
-class IndexStoreSpec extends AnyFunSuite {
+  * the store machinery itself: reuse, torn-build recovery, the
+  * racing-builder convergence path, and the pinned-schema read. */
+class IndexStoreSpec extends SparkSpec {
 
   private def write(f: java.io.File, s: String): Unit = {
     f.getParentFile.mkdirs()
@@ -50,5 +51,30 @@ class IndexStoreSpec extends AnyFunSuite {
       new java.io.File(dir, "data/_SUCCESS").toPath), "UTF-8")
     assert(kept == "competitor", "the losing builder must not clobber the winner")
     assert(leftovers(parent).isEmpty, "the losing build copy must be discarded")
+  }
+
+  test("readPublished pins a dir's schema until the dir is deleted") {
+    import IndexStore.PublishSyntax
+    val dir = new java.io.File(
+      java.nio.file.Files.createTempDirectory("idxstore").toFile, "pub").getAbsolutePath
+    val rows = s"$dir/rows"
+    def publish(df: org.apache.spark.sql.DataFrame): Unit = {
+      IndexStore.ensure(dir, "rows/_SUCCESS")(tmp => df.publishTo(s"$tmp/rows")); ()
+    }
+    def columns: Seq[String] = IndexStore.readPublished(spark, rows).columns.toSeq
+    publish(spark.range(3).toDF("id"))
+    assert(columns == Seq("id"))
+    // the pin is live: rewriting the files in place behind the store's
+    // back (a publish-once violation) keeps serving the pinned schema
+    spark.range(3).toDF("id").withColumn("extra", lit(1))
+      .write.mode("overwrite").parquet(rows)
+    assert(columns == Seq("id"), "readPublished re-inferred instead of pinning")
+    // a delete through Lifecycle drops the pin, so the republished
+    // layout is read with its own schema
+    graft.Lifecycle.deleteRecursively(new java.io.File(dir))
+    publish(spark.range(3).toDF("id").withColumn("extra", lit(7)))
+    assert(columns == Seq("id", "extra"))
+    assert(IndexStore.readPublished(spark, rows).select("extra").distinct()
+      .collect().map(_.getInt(0)).toSeq == Seq(7))
   }
 }

@@ -253,10 +253,22 @@ class OperatorsSpec extends SparkSpec {
     assert("hashpartitioning".r.findAllIn(lp).length <= 5, s"plan:\n$lp")
     assert(hx(TextDedup.t07.fn(spark, sf)) == 0)
     // t08's one remaining exchange (the chunk-hash clustering) is ELIDED
-    // outright when the byte-derived kernel width is 1 at spec scale — a
+    // outright when the byte-derived kernel width is 1 — a
     // SinglePartition child satisfies the clustering requirement, so
-    // EnsureRequirements adds no shuffle. Upper bound, same spirit as lp's.
-    assert(hx(TextDedup.t08.fn(spark, sf)) <= 1)
+    // EnsureRequirements adds no shuffle — and present exactly once
+    // at any wider kernel width. Both arms are pinned: the natural
+    // width of the spec corpus, and the width forced to
+    // defaultParallelism by a 1-byte-per-task budget.
+    def t08Exchanges: (Int, Int) = (
+      Fanout.widthFor(graft.Tables.documents(spark, sf)),
+      hx(TextDedup.t08.fn(spark, sf)))
+    val (width, n) = t08Exchanges
+    assert(n == (if (width > 1) 1 else 0), s"kernel width $width")
+    spark.conf.set("spark.graft.kernel.bytesPerTask", "1")
+    val (forcedWidth, forcedN) =
+      try t08Exchanges finally spark.conf.unset("spark.graft.kernel.bytesPerTask")
+    assert(forcedWidth == spark.sparkContext.defaultParallelism)
+    assert(forcedN == (if (forcedWidth > 1) 1 else 0), s"kernel width $forcedWidth")
   }
 
   test("decontamination broadcasts the benchmark shingle side") {

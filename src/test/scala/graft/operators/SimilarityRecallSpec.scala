@@ -3,18 +3,18 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Pins ANN recall as an ASSERTED gate, not a ScaleSmoke print: the
+/** Pins ANN recall as an ASSERTED gate, not a printed measurement: the
   * sign-LSH banding (T tables × P planes) is a recall/cost dial, and a
   * future re-tune of T/P/seed or a bug in the bucketing join could
   * silently destroy recall while every hash-gate stays green (the gate
   * only checks the LSH result matches its own DuckDB re-execution, not
   * that the candidates cover the true neighbors). The tuned config the
   * scale experiments validated (T=16 × P=8, cos ≥ 0.9 — recall 1.0 in
-  * ScaleSmoke's replicated-corpus runs, PLANS.md) must keep ≥ 0.95 of
+  * the replicated-corpus scale runs, PLANS.md) must keep ≥ 0.95 of
   * the exact all-pairs result.
   *
   * The real corpus is near-random (zero pairs at cos ≥ 0.9 — measured),
-  * so the fixture is ScaleSmoke's validated construction: the sf0.001
+  * so the fixture is the scale runs' validated construction: the sf0.001
   * corpus unioned with a component-shifted replica of itself, putting
   * each (original, replica) pair near cos = 1 but NOT identical — the
   * shift flips some plane signs, so banding actually gets exercised

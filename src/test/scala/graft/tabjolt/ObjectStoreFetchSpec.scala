@@ -25,10 +25,10 @@ class ObjectStoreFetchSpec extends SparkSpec {
   private val ref = "/root/reference"
   private val bucket = "tabjolt-bucket"
   private val runDate = LocalDate.of(2024, 7, 30)
-  private val refFiles = Seq(
-    "summary_line.csv", "wincounter.tsv", "modified_workbook.csv", "rejected.txt")
+  private val refFiles = ReferenceSamples.files
 
   private def stage(): Unit = {
+    ReferenceSamples.require(ref)
     spark.sparkContext.hadoopConfiguration
       .set("fs.mockfs.impl", classOf[MockObjectStoreFileSystem].getName)
     refFiles.foreach { f =>

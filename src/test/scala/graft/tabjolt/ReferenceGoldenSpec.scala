@@ -45,6 +45,7 @@ class ReferenceGoldenSpec extends SparkSpec {
     df.collect().toSeq.map(_.toSeq)
 
   test("ingest loads the reference files verbatim, lossless split") {
+    ReferenceSamples.require(ref)
     assert(tables.summaryLine.count() == 4)
     assert(tables.winCounter.count() == 96)
     // 6 samples + the JTL header row ingested as data (screened later
@@ -57,26 +58,31 @@ class ReferenceGoldenSpec extends SparkSpec {
   }
 
   test("Q1/Q2/Q3 — today's Avg/Max/Min summary metric") {
+    ReferenceSamples.require(ref)
     assert(rows(Queries.dailyMetric(tables.summaryLine, runDate, "Avg")) == Seq(Seq("12661")))
     assert(rows(Queries.dailyMetric(tables.summaryLine, runDate, "Max")) == Seq(Seq("12661")))
     assert(rows(Queries.dailyMetric(tables.summaryLine, runDate, "Min")) == Seq(Seq("12661")))
   }
 
   test("Q4 — latest wincounter execution timestamp") {
+    ReferenceSamples.require(ref)
     assert(rows(Queries.latestExecution(tables.winCounter)) ==
       Seq(Seq(java.sql.Timestamp.valueOf("2024-07-30 15:30:13"))))
   }
 
   test("Q5 — historic average (single Avg row; Err row screened by metric filter)") {
+    ReferenceSamples.require(ref)
     assert(rows(Queries.historicAvg(tables.summaryLine)) == Seq(Seq(12661)))
   }
 
   test("Q6 — trend series") {
+    ReferenceSamples.require(ref)
     assert(rows(Queries.trendSeries(tables.summaryLine)) ==
       Seq(Seq(java.sql.Date.valueOf("2024-07-30"), 12661)))
   }
 
   test("Q7 — today's site-view samples (1 of 6: only one rm carries 'Site:')") {
+    ReferenceSamples.require(ref)
     assert(rows(Queries.todaysSamples(tables.performanceSamples, runDate)) == Seq(Seq(
       12661, "0", "true", "Interact Viz Test",
       "Site: traimgtraimgprod; Workbook: StartTimeAnalysisv202403; View: ExamStartAnalysis;")))
@@ -88,6 +94,7 @@ class ReferenceGoldenSpec extends SparkSpec {
   }
 
   test("runDaily end-to-end over the reference files") {
+    ReferenceSamples.require(ref)
     val sink = new CaptureEmailSink
     val e2eCfg = cfg.copy(rejectedPath = scratch.resolve("rejected-e2e").toString)
     val html = Pipeline.runDaily(spark, e2eCfg, runDate, sink)
