@@ -4,7 +4,6 @@ import graft.{QueryDef, Tables}
 import graft.functions.Exact._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import graft.operators.IndexStore.PublishSyntax
 import graft.operators.Fanout.SpreadSyntax
 import org.apache.spark.sql.functions._
 
@@ -115,11 +114,10 @@ object Advanced {
     * keyed on the embeddings table fingerprint. */
   private[operators] object EmbDedupIndex {
     private[operators] def indexDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_embdedup_" +
-        IndexStore.corpusFingerprint(d, "embeddings")
+      IndexStore.dir("embdedup", d, "embeddings")
 
-    def ensure(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-      val dir = IndexStore.ensure(indexDirFor(d), "keep/_SUCCESS") { tmp =>
+    def ensure(s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
+      IndexStore.published(s, indexDirFor(d), "keep") {
         // Raw (undeduped) LSH pairs: min(id1) absorbs the multi-table
         // duplicates in the map-side partial aggregate, so the
         // distinct's whole-candidate-stream exchange is dropped from
@@ -130,10 +128,7 @@ object Advanced {
         Similarity.lshPairsDedupRaw(s, d)
           .groupBy(col("id2").as("vec_id"))
           .agg(min(col("id1")).as("keep_id"))
-          .publishTo(s"$tmp/keep")
       }
-      s.read.parquet(s"$dir/keep")
-    }
   }
 
   val t09 = QueryDef(

@@ -3,7 +3,6 @@ package graft.operators
 import graft.{QueryDef, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import graft.operators.IndexStore.PublishSyntax
 import org.apache.spark.sql.functions._
 
 /** Corpus-curation operators a large-scale training-data pipeline needs
@@ -363,19 +362,16 @@ object Corpus {
     * fingerprint (the [[TextDedup.ResidentPairIndex]] convention). */
   private[operators] object LabelIndex {
     private[graft] def indexDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_labels_l1_${IndexStore.corpusFingerprint(d, "documents")}"
-    def ensure(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-      val dir = IndexStore.ensure(indexDirFor(d), "labels/_SUCCESS") { tmp =>
+      IndexStore.dir("labels_l1", d, "documents")
+    def ensure(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+      IndexStore.published(s, indexDirFor(d), "labels") {
         val pairs = TextDedup.ResidentPairIndex.ensure(s, d)
           .select(col("doc1"), col("doc2"))
         val und = pairs.select(col("doc1").as("src"), col("doc2").as("dst"))
           .unionByName(pairs.select(col("doc2").as("src"), col("doc1").as("dst")))
         connectedComponents(und)
           .select(col("v").as("doc_id"), col("label").as("cluster_id"))
-          .publishTo(s"$tmp/labels")
       }
-      s.read.parquet(s"$dir/labels")
-    }
   }
 
   /** INCREMENTAL cluster maintenance — the delta path for t11, the one

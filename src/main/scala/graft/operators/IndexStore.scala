@@ -8,7 +8,12 @@ package graft.operators
   * deployment builds each once per corpus version as a scheduled job and
   * every consumer reads; recomputing one inside each consumer query is
   * the difference between one LSH pass and three per pipeline run
-  * (round-7 t07/t11/t19).
+  * (t07, t11 and t19 all read one pair index).
+  *
+  * One place names, publishes and reads every index: [[dir]] names it,
+  * [[published]] builds, publishes and reads a one-artifact index, and
+  * builds that write several artifacts (or non-parquet files) run
+  * [[ensure]] themselves and read through [[readPublished]].
   *
   * Guarantees:
   *  - a regenerated corpus at the SAME path changes the fingerprint
@@ -18,13 +23,12 @@ package graft.operators
   *    sees either the complete index or none — never a torn one — and
   *    racing builders converge on one winner;
   *  - the completeness marker (written last within the build) gates out
-  *    a torn leftover from a crashed pre-rename build.
+  *    a torn leftover from a crashed pre-rename build;
+  *  - a build that throws leaves neither a target dir nor a scratch
+  *    sibling behind.
   *
   * NOT covered: CODE staleness — the fingerprint sees the corpus, not
-  * the builder. An artifact whose layout/derivation changes must bump a
-  * layout-version salt in its dir name (the `_l1` convention:
-  * SourcesStreaming.RewriteLayoutV, BandIndex) or a warm /tmp serves
-  * the old code's output.
+  * the builder; see [[dir]] for the layout-version salt that covers it.
   */
 private[graft] object IndexStore {
 
@@ -66,7 +70,7 @@ private[graft] object IndexStore {
     * byteStringAsBytes rejects) and the size-string form ("10MB"). The
     * ONE parser for every tier gate: a drifted duplicate would let the
     * broadcast and SHUFFLE_HASH tiers of one join disagree about the
-    * cap (r16 review). */
+    * cap. */
   def broadcastCapBytes(s: org.apache.spark.sql.SparkSession): Long = {
     val raw = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     scala.util.Try(raw.trim.toLong).getOrElse(
@@ -117,7 +121,7 @@ private[graft] object IndexStore {
     // (local mode: the driver JVM heap; cluster mode: the executor conf
     // when set — and when UNSET, Spark's own 1g executor default, never
     // the driver's heap: a fat driver would overprice the executors'
-    // share and admit a build the 1g executors cannot hold — r16 ADVICE)
+    // share and admit a build the 1g executors cannot hold)
     val isClusterMaster = s.sparkContext.master.startsWith("spark") ||
       s.sparkContext.master.startsWith("yarn") ||
       s.sparkContext.master.startsWith("k8s")
@@ -134,8 +138,8 @@ private[graft] object IndexStore {
     val buildOverhead = 4L
     // AQE partition coalescing folds several shuffle partitions into one
     // task, so est/parts underprices the real per-task build: a
-    // coalesced task reads up to the advisory target (r16 ADVICE).
-    // Bound the per-task input by BOTH.
+    // coalesced task reads up to the advisory target. Bound the
+    // per-task input by BOTH.
     val aqeCoalesce =
       s.conf.get("spark.sql.adaptive.enabled", "true").toBoolean &&
         s.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true").toBoolean
@@ -172,14 +176,9 @@ private[graft] object IndexStore {
     * that dir's previously-published index across a content change the
     * failed listing could not see. The path key confines that risk to
     * one corpus; distinct corpora can never collide onto one degraded
-    * fingerprint.
-    *
-    * Migration note (r11→r12): local listing moved from java.io.File to
-    * ChecksumFileSystem, which excludes `.crc` sidecar files the old
-    * listing included — so fingerprints of unchanged local corpora
-    * changed once at the switch, forcing a one-time rebuild of every
-    * persisted index. Expected and harmless; fingerprints are stable
-    * again from this vintage on. */
+    * fingerprint. Local listings go through ChecksumFileSystem, which
+    * excludes `.crc` sidecar files, so a sidecar never changes the
+    * fingerprint. */
   def corpusFingerprint(d: String, table: String): String = {
     val path = new org.apache.hadoop.fs.Path(s"$d/$table.parquet")
     val desc =
@@ -202,21 +201,37 @@ private[graft] object IndexStore {
     md.digest(desc.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
   }
 
+  /** The state dir of an index over `<d>/<table>.parquet`:
+    * `<java.io.tmpdir>/graft_<prefix>_<fingerprint><suffix>`. The ONE
+    * place index state is named. The contract every name keeps:
+    *  - the corpus fingerprint ([[corpusFingerprint]]) makes a
+    *    regenerated corpus a different dir, so data staleness is never
+    *    served;
+    *  - the fingerprint cannot see the BUILDER, so `prefix` (or
+    *    `suffix`) carries a layout-version salt (`pairs_res_l1`,
+    *    `ph16v1`, `tomb2`, ...). Bump the salt whenever a build's
+    *    output layout or derivation changes, or a warm dir serves the
+    *    old code's output;
+    *  - `suffix` holds every other input the content depends on
+    *    (`_k16`, a night, an instance salt, a budget), so two builds
+    *    that differ in content never share a name. */
+  def dir(prefix: String, d: String, table: String, suffix: String = ""): String =
+    s"${sys.props("java.io.tmpdir")}/graft_${prefix}_${corpusFingerprint(d, table)}$suffix"
+
   private val statsCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
 
   /** (bytes, rows) of `<d>/<table>.parquet`, memoized per corpus
     * FINGERPRINT: the footer opens behind [[corpusRows]] are O(files)
     * sequential driver round-trips on an object store, and the value is
-    * constant per fingerprint — recomputing it on every delta-plan
-    * construction was the r17 review's efficiency finding. A corpus
-    * regenerated in place changes the fingerprint, so the cache can
-    * never serve stale stats. Degraded (-1) readings are NOT cached:
-    * the fingerprint listing can succeed while the bytes/rows listing
-    * transiently fails, and caching the -1 under the healthy
-    * fingerprint would pin callers to the safe-but-slow branch until
-    * the corpus content changes (r17 ADVICE) — recompute instead, so
-    * a transient error is retried on the next call. */
+    * constant per fingerprint, so it is not recomputed on every
+    * delta-plan construction. A corpus regenerated in place changes the
+    * fingerprint, so the cache can never serve stale stats. Degraded
+    * (-1) readings are NOT cached: the fingerprint listing can succeed
+    * while the bytes/rows listing transiently fails, and caching the -1
+    * under the healthy fingerprint would pin callers to the
+    * safe-but-slow branch until the corpus content changes — recompute
+    * instead, so a transient error is retried on the next call. */
   def corpusStats(d: String, table: String): (Long, Long) = {
     val key = s"$d/$table:${corpusFingerprint(d, table)}"
     Option(statsCache.get(key)).getOrElse {
@@ -239,8 +254,8 @@ private[graft] object IndexStore {
     * machinery as [[corpusBytes]]. Gives size-gate callers a measured
     * bytes-per-row without scanning: the delta verify join prices its
     * candidate neighborhood as ids × (corpusBytes / corpusRows) instead
-    * of the whole-table upper bound (r16 ADVICE). Degrades to -1 on any
-    * error — callers then keep the always-safe full-table bound. */
+    * of the whole-table upper bound. Degrades to -1 on any error —
+    * callers then keep the always-safe full-table bound. */
   def corpusRows(d: String, table: String): Long =
     try {
       val path = new org.apache.hadoop.fs.Path(s"$d/$table.parquet")
@@ -260,8 +275,7 @@ private[graft] object IndexStore {
     * are flat parquet dirs). NonFatal, not just IOException: a malformed
     * dir string throws IllegalArgumentException from Path/getFileSystem
     * before any IO — every listing failure must degrade to the caller's
-    * always-correct branch as -1, never fail the query (r14 review
-    * finding). */
+    * always-correct branch as -1, never fail the query. */
   def dirBytes(dir: String): Long =
     try {
       val path = new org.apache.hadoop.fs.Path(dir)
@@ -277,10 +291,10 @@ private[graft] object IndexStore {
     * their kernels — correct for decode cost, but writing at that
     * parallelism shipped every published dir as 32 KB-scale part-files,
     * and every consumer scan then fanned into one task per file:
-    * measured r21 (FileCountProbe, quiet window), the same
-    * aggregate over the same published rows costs 719 ms from the
-    * 32-file dir and 232 ms from a 1-file rewrite — a 3× floor on
-    * EVERY probe of EVERY published ring. At production bytes the same
+    * measured at sf0.1 in a quiet window, the same aggregate over the
+    * same published rows costs 719 ms from the 32-file dir and 232 ms
+    * from a 1-file rewrite — a 3× floor on EVERY probe of EVERY
+    * published ring. At production bytes the same
     * REBALANCE splits toward spark.sql.adaptive.advisoryPartitionSizeInBytes,
     * so scan parallelism comes back from 128 MB splits, not file count.
     * The rebalance shuffle moves only the state rows being published —
@@ -302,7 +316,8 @@ private[graft] object IndexStore {
   /** Read a PUBLISHED (publish-once, marker-gated, immutable) index dir
     * with its schema pinned from a per-JVM cache — skips the footer-read
     * schema inference every plan construction over the dir pays (0.27–
-    * 0.38 s of each warm probe plan at sf0.1; the A/B is in PLANS r20).
+    * 0.38 s of each warm probe plan at sf0.1; the A/B is in PLANS.md
+    * Round-20 (5)).
     * Sound ONLY for publish-once dirs: content under a published name
     * never changes (the ensure() rename contract), and a regenerated
     * corpus or bumped layout changes the DIR NAME, never the content
@@ -316,18 +331,21 @@ private[graft] object IndexStore {
 
   /** Ensure the index at `dirPath` is published (its `marker` file
     * exists), running `build` into a private temp sibling and atomically
-    * renaming it into place if not. Returns `dirPath`. */
+    * renaming it into place if not. Returns `dirPath`. A `build` that
+    * throws has its temp sibling deleted and the exception rethrown, so
+    * a failed build leaves neither the sibling nor `dirPath` behind. */
   def ensure(dirPath: String, marker: String)(build: String => Unit): String = {
     val dir = new java.io.File(dirPath)
     if (!new java.io.File(dir, marker).exists()) {
+      import graft.Lifecycle.deleteRecursively
       val tmp = new java.io.File(dir.getParentFile,
         s"${dir.getName}.build-${java.util.UUID.randomUUID()}")
-      build(tmp.getAbsolutePath)
+      try build(tmp.getAbsolutePath)
+      catch { case t: Throwable => deleteRecursively(tmp); throw t }
       if (!tmp.renameTo(dir)) {
         // rename fails only if dir now exists: either a concurrent build
         // won (use theirs) or a torn pre-rename leftover is in the way
         // (replace it)
-        import graft.Lifecycle.deleteRecursively
         if (new java.io.File(dir, marker).exists()) deleteRecursively(tmp)
         else {
           deleteRecursively(dir)
@@ -337,4 +355,20 @@ private[graft] object IndexStore {
     }
     dirPath
   }
+
+  /** [[ensure]] for a one-artifact index: `build`'s frame is published
+    * as parquet at `<dirPath>/<sub>` with `<sub>/_SUCCESS` as the
+    * marker. `build` runs only when the dir is cold. Returns `dirPath`,
+    * for the callers whose API hands out the dir; the rest use
+    * [[published]]. */
+  def ensurePublished(dirPath: String, sub: String)(
+      build: => org.apache.spark.sql.DataFrame): String =
+    ensure(dirPath, s"$sub/_SUCCESS")(tmp => build.publishTo(s"$tmp/$sub"))
+
+  /** The published frame of a one-artifact index: [[ensurePublished]],
+    * then [[readPublished]] of `<dirPath>/<sub>`. */
+  def published(s: org.apache.spark.sql.SparkSession, dirPath: String,
+      sub: String)(build: => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    readPublished(s, s"${ensurePublished(dirPath, sub)(build)}/$sub")
 }

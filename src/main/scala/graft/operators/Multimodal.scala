@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import graft.operators.IndexStore.PublishSyntax
 import graft.operators.Fanout.SpreadSyntax
 import org.apache.spark.sql.functions._
 
@@ -420,7 +419,7 @@ object Multimodal {
     * both unchanged would serve STALE published hashes to
     * mm06/mm07/maintained() while mm04 recomputes inline — the exact
     * divergence [[phashFrame]]'s sharing exists to prevent, surfacing
-    * only on warm-/tmp machines (r18 review). BUMP THIS with ANY change
+    * only on warm-/tmp machines. BUMP THIS with ANY change
     * to [[phash]], [[resizeStub]], [[frameSampleStub]], [[decode]], or
     * the sampling stride below. */
   private val PhashKernelVer = 1
@@ -506,86 +505,104 @@ object Multimodal {
       }.toDF("id", "phash")
   }
 
-  /** The media family's RING — the persisted, corpus-fingerprinted
-    * lifecycle state text pairs ([[TextDedup.PairIndex]]) and vectors
-    * ([[Similarity.IvfIncIndex]]) already had and media lacked (r17
-    * VERDICT slate #3: at 100 TB the pHash verdict is a nightly
-    * artifact, not a per-query recompute — the decode + pHash kernel is
-    * the expensive corpus-shaped pass, and it was re-running inside
-    * every consumer). The artifact is the (id, phash) frame itself —
-    * the REUSABLE layer: every downstream policy (mm04's exact-dup
-    * verdict, mm06's retraction batch, banded hamming matching) is a
-    * cheap derivation over it, so one publication serves them all.
+  /** The persisted (id, phash) RING both hash widths run — one
+    * base/delta/retract body, parameterized by dir `prefix`, cell width,
+    * kernel version and the [[source]] corpus, so the 16-cell
+    * [[MediaIndex]] and the 64-cell [[WideMediaIndex]] cannot drift.
+    * Dirs are named `<prefix>_<fingerprint>_ph<cells>v<kernelVer>_<tag>`
+    * ([[IndexStore.dir]]), so a kernel change that bumps `kernelVer`
+    * never serves the old hashes.
     *
     *  - GROW: night 0 publishes the resident segment (docs outside the
-    *    arriving slice), night 1 the slice's delta — each build runs
-    *    the kernel over ONLY its own rows (t34's delta convention), and
-    *    the reader unions immutable segments;
+    *    arriving slice doc_id % 10 == [[MediaIndex.NewSliceRem]]),
+    *    night 1 the slice's delta — each build runs the kernel over
+    *    ONLY its own rows (t34's delta convention), and the reader
+    *    unions immutable segments;
     *  - RETRACT: a takedown batch anti-joins the served state and the
     *    reduced frame is PUBLISHED (c07's resident-rewrite arm — pHash
     *    is per-row, so retraction is row-drop exact, no recompute);
     *    salted per instance so a gate's tombstones never leak into
-    *    another entry's serving state (the tombstone-store convention).
+    *    another entry's serving state (the tombstone-store convention). */
+  private[graft] abstract class PhashRing(prefix: String, cells: Int,
+      kernelVer: Int) {
+    /** The corpus the ring hashes (doc_id, text rows). */
+    protected def source(s: SparkSession, d: String): DataFrame
+
+    private def dirFor(d: String, tag: String): String =
+      IndexStore.dir(prefix, d, "documents", s"_ph${cells}v${kernelVer}_$tag")
+    private[graft] def baseDirFor(d: String): String = dirFor(d, "base")
+    private[graft] def deltaDirFor(d: String): String = dirFor(d, "delta")
+    private[graft] def retractDirFor(d: String, salt: String): String =
+      dirFor(d, s"retract_$salt")
+
+    /** Publish the kernel over the [[source]] rows matching `pred` at
+      * `dir`. The filter runs BEFORE the kernel: a segment build's
+      * decode cost is ∝ its own rows, never the corpus (the pushed scan
+      * carries the predicate — the t34 delta-cost contract). */
+    private[operators] def kernelSegment(s: SparkSession, d: String,
+        dir: String, pred: org.apache.spark.sql.Column): String =
+      IndexStore.ensurePublished(dir, "phash")(
+        phashFrameOverCells(s, source(s, d).filter(pred).spreadByBytes, cells))
+
+    /** Night 0: the resident segment (everything but tonight's slice). */
+    def ensureBase(s: SparkSession, d: String): String =
+      kernelSegment(s, d, baseDirFor(d),
+        col("doc_id") % 10 =!= MediaIndex.NewSliceRem)
+
+    /** Night 1: the arriving slice's delta segment — kernel over the
+      * slice only. */
+    def ensureDelta(s: SparkSession, d: String): String =
+      kernelSegment(s, d, deltaDirFor(d),
+        col("doc_id") % 10 === MediaIndex.NewSliceRem)
+
+    /** The served (id, phash) state: resident ∪ delta — row-identical
+      * to the inline full-corpus derivation by construction (the
+      * slices partition the corpus; pHash is per-row). */
+    def maintained(s: SparkSession, d: String): DataFrame =
+      IndexStore.readPublished(s, s"${ensureBase(s, d)}/phash")
+        .unionByName(IndexStore.readPublished(s, s"${ensureDelta(s, d)}/phash"))
+
+    /** RETRACT: publish the served state minus `tombs` (media
+      * takedowns) as instance `salt`'s reduced resident — row-drop
+      * exact, cost ∝ state bytes, the c07 rewrite arm. */
+    def ensureRetracted(s: SparkSession, d: String, salt: String,
+        tombs: DataFrame): String =
+      IndexStore.ensurePublished(retractDirFor(d, salt), "phash")(
+        maintained(s, d)
+          .join(tombs.select(col("id")).distinct(), Seq("id"), "left_anti"))
+  }
+
+  /** The media family's RING at the 16-cell width — the persisted,
+    * corpus-fingerprinted lifecycle state text pairs
+    * ([[TextDedup.PairIndex]]) and vectors ([[Similarity.IvfIncIndex]])
+    * have: at 100 TB the pHash verdict is a nightly artifact, not a
+    * per-query recompute — the decode + pHash kernel is the expensive
+    * corpus-shaped pass, and it would otherwise re-run inside every
+    * consumer. The artifact is the (id, phash) frame itself — the
+    * REUSABLE layer: every downstream policy (mm04's exact-dup verdict,
+    * mm06's retraction batch, banded hamming matching) is a cheap
+    * derivation over it, so one publication serves them all. Lifecycle:
+    * [[PhashRing]].
     *
     * mm07 hash-gates grow and retract against from-scratch DuckDB
     * derivations of exactly those corpora; mm06 reads [[maintained]]
     * (same rows as the inline derivation by construction — its hash is
     * unchanged, its kernel cost collapses to a warm parquet read). */
-  object MediaIndex {
+  object MediaIndex extends PhashRing("media", PhashCells, PhashKernelVer) {
     /** Tonight's arriving media slice (doc_id % 10). */
     private[graft] val NewSliceRem = 6
 
-    private def fp(d: String): String =
-      IndexStore.corpusFingerprint(d, "documents")
-    private[graft] def baseDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_media_${fp(d)}_ph${PhashCells}v${PhashKernelVer}_base"
-    private[graft] def deltaDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_media_${fp(d)}_ph${PhashCells}v${PhashKernelVer}_delta"
-    private[graft] def retractDirFor(d: String, salt: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_media_${fp(d)}_ph${PhashCells}v${PhashKernelVer}_retract_$salt"
-
-    private def docsSlice(s: org.apache.spark.sql.SparkSession, d: String,
-        inSlice: Boolean): DataFrame = {
-      val pred =
-        if (inSlice) col("doc_id") % 10 === NewSliceRem
-        else col("doc_id") % 10 =!= NewSliceRem
-      // filter BEFORE the kernel: a segment build's decode cost is ∝
-      // its own rows, never the corpus (the pushed scan carries the
-      // predicate — the t34 delta-cost contract)
-      Tables.documents(s, d).filter(pred)
-        .spreadByBytes
-    }
-
-    /** Night 0: the resident segment (everything but tonight's slice). */
-    def ensureBase(s: org.apache.spark.sql.SparkSession, d: String): String =
-      IndexStore.ensure(baseDirFor(d), "phash/_SUCCESS") { tmp =>
-        phashFrameOver(s, docsSlice(s, d, inSlice = false))
-          .publishTo(s"$tmp/phash")
-      }
-
-    /** Night 1: the arriving slice's delta segment — kernel over the
-      * slice only. */
-    def ensureDelta(s: org.apache.spark.sql.SparkSession, d: String): String =
-      IndexStore.ensure(deltaDirFor(d), "phash/_SUCCESS") { tmp =>
-        phashFrameOver(s, docsSlice(s, d, inSlice = true))
-          .publishTo(s"$tmp/phash")
-      }
-
-    /** The served (id, phash) state: resident ∪ delta — row-identical
-      * to the inline full-corpus derivation by construction (the
-      * slices partition the corpus; pHash is per-row). */
-    def maintained(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-      s.read.parquet(s"${ensureBase(s, d)}/phash")
-        .unionByName(s.read.parquet(s"${ensureDelta(s, d)}/phash"))
+    protected def source(s: SparkSession, d: String): DataFrame =
+      Tables.documents(s, d)
 
     /** The media family's DUP verdict over the served state — every doc
       * dominated by a smaller-id doc with the same pHash (mm04's rule).
       * ONE body for mm06's retraction batch and c09's capstone stage
-      * (the r18 review found the window/rk/checkpoint block copied
-      * between them — the drift class probeKeep/phashFrame factoring
-      * exists to prevent). localCheckpointed: the verdict is
-      * metadata-sized and feeds several plan branches in every
-      * consumer (retraction anti-joins + batch anti-join). */
+      * (a copied window/rk/checkpoint block is the drift class the
+      * probeKeep/phashFrame factoring exists to prevent).
+      * localCheckpointed: the verdict is metadata-sized and feeds
+      * several plan branches in every consumer (retraction anti-joins +
+      * batch anti-join). */
     private[operators] def dupVerdict(s: org.apache.spark.sql.SparkSession,
         d: String): DataFrame = {
       import org.apache.spark.sql.expressions.Window
@@ -596,7 +613,7 @@ object Multimodal {
       // happened to broadcast off the window's stats estimate, but
       // c10's near verdict (a join-shaped origin) estimated big and
       // silently planned 18 sort-merge anti-joins against a
-      // metadata-sized frame (r19 plan audit)
+      // metadata-sized frame (found in a plan audit)
       broadcast(maintained(s, d)
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") > 1).select(col("id").as("doc_id"))
@@ -608,10 +625,9 @@ object Multimodal {
       * its consumer is the STATIC side of st10's stream-static join,
       * which Spark re-evaluates on EVERY micro-batch — without the
       * checkpoint that is a warm parquet read + window per batch, not
-      * the "reads it once" the first docstring claimed (r18 ADVICE).
-      * The verdict is metadata-sized, so pinning it as an in-memory
-      * RDD is the honest way to make the per-batch cost a scan of K
-      * rows. */
+      * a read once. The verdict is metadata-sized, so pinning it as an
+      * in-memory RDD is the honest way to make the per-batch cost a scan
+      * of K rows. */
     private[graft] def keeperVerdict(s: org.apache.spark.sql.SparkSession,
         d: String): DataFrame = {
       import org.apache.spark.sql.expressions.Window
@@ -635,23 +651,12 @@ object Multimodal {
       val state = maintained(s, d)
       // outer broadcast: same contract as dupVerdict — without it the
       // checkpointed frame inherits the join-shaped size estimate and
-      // every downstream anti-join planned sort-merge (r19 plan audit)
+      // every downstream anti-join planned sort-merge
       broadcast(state.join(broadcast(nearDupKeepers(state)), Seq("phash"))
         .filter(col("id") =!= col("keep_id"))
         .select(col("id").as("doc_id"))
         .localCheckpoint())
     }
-
-    /** RETRACT: publish the served state minus `tombs` (media
-      * takedowns) as instance `salt`'s reduced resident — row-drop
-      * exact, cost ∝ state bytes, the c07 rewrite arm. */
-    def ensureRetracted(s: org.apache.spark.sql.SparkSession, d: String,
-        salt: String, tombs: DataFrame): String =
-      IndexStore.ensure(retractDirFor(d, salt), "phash/_SUCCESS") { tmp =>
-        maintained(s, d)
-          .join(tombs.select(col("id")).distinct(), Seq("id"), "left_anti")
-          .publishTo(s"$tmp/phash")
-      }
 
     /** Hamming radius served by [[nearDupKeepers]] — the re-encode/
       * resize tolerance a production image pipeline runs (1–2 bits of
@@ -780,11 +785,11 @@ object Multimodal {
 
     /** CHAIN clustering over the radius pairs — connected components,
       * the transitive policy [[nearDupKeepers]]'s one-hop dominance
-      * explicitly defers to (r19 VERDICT slate #2; the t11 shape on the
-      * media side): a 2-hop re-encode chain — hamming 4 from the origin
-      * at 2 per hop, each hop within tolerance but the ENDPOINTS beyond
-      * it — lands in ONE cluster with one keeper, so the takedown/dedup
-      * verdict reaches every re-encode generation. Returns one row per
+      * explicitly defers to (the t11 shape on the media side): a 2-hop
+      * re-encode chain — hamming 4 from the origin at 2 per hop, each
+      * hop within tolerance but the ENDPOINTS beyond it — lands in ONE
+      * cluster with one keeper, so the takedown/dedup verdict reaches
+      * every re-encode generation. Returns one row per
       * distinct phash: (phash, keep_id), keep_id = min doc id across
       * the hash's whole radius-connected chain; short hashes keep their
       * own group min (exact-grouping-only, the family rule).
@@ -855,15 +860,15 @@ object Multimodal {
     private[graft] val TombRem = 4
     // distinct slices, checked where they are defined: equal remainders
     // would silently degenerate seg0/seg1/seg3's schedule predicates
-    // (seg0 empty of nothing, night 1 == night 3), caught today only by
-    // one SF-specific test assertion (r19 ADVICE)
+    // (seg0 empty of nothing, night 1 == night 3), which only one
+    // SF-specific test assertion would otherwise catch
     require(GrowRem != LateRem,
       s"MediaSoakRing: GrowRem ($GrowRem) and LateRem ($LateRem) must " +
         "name different %10 slices — the soak schedule degenerates otherwise")
 
     private def dirFor(d: String, tag: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_mediasoak_" +
-        s"${IndexStore.corpusFingerprint(d, "documents")}_ph${PhashCells}v${PhashKernelVer}_$tag"
+      IndexStore.dir("mediasoak", d, "documents",
+        s"_ph${PhashCells}v${PhashKernelVer}_$tag")
 
     /** The slices NOT yet arrived at the end of `night` — the ONE
       * schedule derivation both condition generators share (a drifted
@@ -873,8 +878,8 @@ object Multimodal {
       case 1 | 2 => Seq(LateRem)
       case 3 => Seq.empty[Int]
       // descriptive, not a bare MatchError: presentAt/presentSql reach
-      // here from spec/oracle generators too (served() already had the
-      // equivalent guard; this one was missing — r19 ADVICE)
+      // here from spec/oracle generators too (served() has the
+      // equivalent guard)
       case n => sys.error(s"media soak ring has 4 nights (0-3); got $n")
     }
 
@@ -896,47 +901,37 @@ object Multimodal {
       if (parts.isEmpty) "TRUE" else parts.mkString(" AND ")
     }
 
-    private def kernelSegment(s: org.apache.spark.sql.SparkSession,
-        d: String, tag: String, pred: org.apache.spark.sql.Column): String =
-      IndexStore.ensure(dirFor(d, tag), "phash/_SUCCESS") { tmp =>
-        // filter BEFORE the kernel — the pushed slice predicate keeps
-        // each night's decode cost ∝ its own rows (the MediaIndex
-        // segment contract)
-        phashFrameOver(s, Tables.documents(s, d)
-            .filter(pred)
-            .spreadByBytes)
-          .publishTo(s"$tmp/phash")
-      }
+    /** Night `tag`'s segment: the 16-cell ring's kernel over the docs
+      * matching `pred` ([[PhashRing.kernelSegment]]). */
+    private def kernelSegment(s: SparkSession, d: String, tag: String,
+        pred: org.apache.spark.sql.Column): DataFrame =
+      IndexStore.readPublished(s,
+        s"${MediaIndex.kernelSegment(s, d, dirFor(d, tag), pred)}/phash")
 
-    private def seg0(s: org.apache.spark.sql.SparkSession, d: String): String =
+    private def seg0(s: SparkSession, d: String): DataFrame =
       kernelSegment(s, d, "n0",
         col("doc_id") % 10 =!= GrowRem && col("doc_id") % 10 =!= LateRem)
-    private def seg1(s: org.apache.spark.sql.SparkSession, d: String): String =
+    private def seg1(s: SparkSession, d: String): DataFrame =
       kernelSegment(s, d, "n1", col("doc_id") % 10 === GrowRem)
-    private def seg3(s: org.apache.spark.sql.SparkSession, d: String): String =
+    private def seg3(s: SparkSession, d: String): DataFrame =
       kernelSegment(s, d, "n3",
         col("doc_id") % 10 === LateRem && col("doc_id") % TombMod =!= TombRem)
 
     /** Night 2: the takedown batch retracted from night 1's SERVED
       * state, reduced state published — row-drop exact, cost ∝ state
       * bytes, never a kernel re-run. */
-    private def ensureRetracted(s: org.apache.spark.sql.SparkSession,
-        d: String): String =
-      IndexStore.ensure(dirFor(d, "n2"), "phash/_SUCCESS") { tmp =>
-        served(s, d, 1).filter(col("id") % TombMod =!= TombRem)
-          .publishTo(s"$tmp/phash")
-      }
+    private def ensureRetracted(s: SparkSession, d: String): DataFrame =
+      IndexStore.published(s, dirFor(d, "n2"), "phash")(
+        served(s, d, 1).filter(col("id") % TombMod =!= TombRem))
 
     /** The SERVED (id, phash) state at the end of `night`, chained
       * through the published artifacts. Unordered — consumers sort. */
-    def served(s: org.apache.spark.sql.SparkSession, d: String,
+    def served(s: SparkSession, d: String,
         night: Int): DataFrame = night match {
-      case 0 => s.read.parquet(s"${seg0(s, d)}/phash")
-      case 1 => s.read.parquet(s"${seg0(s, d)}/phash")
-        .unionByName(s.read.parquet(s"${seg1(s, d)}/phash"))
-      case 2 => s.read.parquet(s"${ensureRetracted(s, d)}/phash")
-      case 3 => s.read.parquet(s"${ensureRetracted(s, d)}/phash")
-        .unionByName(s.read.parquet(s"${seg3(s, d)}/phash"))
+      case 0 => seg0(s, d)
+      case 1 => seg0(s, d).unionByName(seg1(s, d))
+      case 2 => ensureRetracted(s, d)
+      case 3 => ensureRetracted(s, d).unionByName(seg3(s, d))
       case n => sys.error(s"media soak ring has 4 nights (0-3); got $n")
     }
   }
@@ -944,7 +939,7 @@ object Multimodal {
   /** The media family at the PRODUCTION hash width — 64-cell aHash (the
     * 8×8 grid real image pipelines run) over the SAME decode → sample →
     * pool → threshold kernel ([[phashFrameOverCells]]), with its own
-    * published base+delta ring (r19 VERDICT slate #1: the 16-cell
+    * published base+delta ring ([[PhashRing]]; the 16-cell
     * family's "distinct hashes keyspace-bounded ⇒ broadcast-sized
     * matching forever" scale story is an artifact of the toy width —
     * 23k/65k keyspace occupancy at 1.25M docs already has unrelated
@@ -960,7 +955,7 @@ object Multimodal {
     * banding stays O(bands · Σ bucket²)).
     *
     * FIXTURE: gate corpora are text stand-ins whose 64-bit hashes almost
-    * never land within radius 4 naturally (measured r20: ZERO d ≤ 4
+    * never land within radius 4 naturally (measured: ZERO d ≤ 4
     * pairs at sf0.01) — the tolerance arm would never decide a verdict.
     * The ring corpus is therefore AUGMENTED with deterministic
     * "re-encode" twins: every doc in the %10 == [[TwinRem]] slice gets a
@@ -972,7 +967,8 @@ object Multimodal {
     * SQL expression ([[TwinSql]]) both engines evaluate; the oracle
     * re-derives the whole augmented corpus, 64-cell chain, and all-pairs
     * two-half hamming verdict from scratch. */
-  object WideMediaIndex {
+  object WideMediaIndex
+      extends PhashRing("mediawide", Phash64Cells, Phash64KernelVer) {
     /** Twinned slice + id remap for the planted near-twins. The offset
       * is ≡ 0 (mod 10) so a twin inherits its original's slice
       * remainder — twins of the [[TwinRem]] slice never land in the
@@ -1010,8 +1006,7 @@ object Multimodal {
     // an in-JVM delete-and-rebuild of a corpus dir must re-run the
     // collision guard: a rebuilt corpus whose doc_ids now reach
     // TwinIdOffset would otherwise silently pass a check done against
-    // the old content (r21 ADVICE — mirrors the IndexStore schemaCache
-    // invalidation)
+    // the old content (mirrors the IndexStore schemaCache invalidation)
     graft.Lifecycle.onDelete { p =>
       idBoundChecked.removeIf(k => k == p || k.startsWith(p + "/")); ()
     }
@@ -1020,7 +1015,7 @@ object Multimodal {
       * Twin ids live at original + [[TwinIdOffset]]: a corpus whose real
       * doc_ids reach the offset would collide twin ids with real docs
       * (both engines would agree, so the gate would stay silently green
-      * on broken fixture semantics — r20 ADVICE); fail loud instead. */
+      * on broken fixture semantics); fail loud instead. */
     private[graft] def wideCorpus(s: org.apache.spark.sql.SparkSession,
         d: String): DataFrame = {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
@@ -1040,42 +1035,8 @@ object Multimodal {
             expr(TwinSql).as("text")))
     }
 
-    private def fp(d: String): String =
-      IndexStore.corpusFingerprint(d, "documents")
-    private[graft] def baseDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_mediawide_${fp(d)}_ph${Phash64Cells}v${Phash64KernelVer}_base"
-    private[graft] def deltaDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_mediawide_${fp(d)}_ph${Phash64Cells}v${Phash64KernelVer}_delta"
-
-    private def slice(s: org.apache.spark.sql.SparkSession, d: String,
-        inSlice: Boolean): DataFrame = {
-      val pred =
-        if (inSlice) col("doc_id") % 10 === MediaIndex.NewSliceRem
-        else col("doc_id") % 10 =!= MediaIndex.NewSliceRem
-      // filter BEFORE the kernel (the MediaIndex segment contract):
-      // a segment build's decode cost is ∝ its own rows
-      wideCorpus(s, d).filter(pred)
-        .spreadByBytes
-    }
-
-    /** Resident segment (everything but tonight's arriving slice). */
-    def ensureBase(s: org.apache.spark.sql.SparkSession, d: String): String =
-      IndexStore.ensure(baseDirFor(d), "phash/_SUCCESS") { tmp =>
-        phashFrameOverCells(s, slice(s, d, inSlice = false), Phash64Cells)
-          .publishTo(s"$tmp/phash")
-      }
-
-    /** Tonight's arriving slice's delta segment. */
-    def ensureDelta(s: org.apache.spark.sql.SparkSession, d: String): String =
-      IndexStore.ensure(deltaDirFor(d), "phash/_SUCCESS") { tmp =>
-        phashFrameOverCells(s, slice(s, d, inSlice = true), Phash64Cells)
-          .publishTo(s"$tmp/phash")
-      }
-
-    /** The served (id, 64-cell phash) state: resident ∪ delta. */
-    def maintained(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-      s.read.parquet(s"${ensureBase(s, d)}/phash")
-        .unionByName(s.read.parquet(s"${ensureDelta(s, d)}/phash"))
+    protected def source(s: SparkSession, d: String): DataFrame =
+      wideCorpus(s, d)
 
     /** Hamming radius served at 64 bits — the re-encode tolerance the
       * production width runs (the twin fixture's measured d ≤ 4 band).
@@ -1205,20 +1166,6 @@ object Multimodal {
         .unionByName(perHash.filter(length(col("phash")) =!= Phash64Cells)
           .select(col("phash"), col("min_id").as("keep_id")))
     }
-
-    /** RETRACT: publish the served 64-bit state minus `tombs` as
-      * instance `salt`'s reduced resident — row-drop exact, cost ∝
-      * state bytes, [[MediaIndex.ensureRetracted]]'s arm at the
-      * production width. */
-    def ensureRetracted(s: org.apache.spark.sql.SparkSession, d: String,
-        salt: String, tombs: DataFrame): String =
-      IndexStore.ensure(
-        s"${sys.props("java.io.tmpdir")}/graft_mediawide_${fp(d)}_ph${Phash64Cells}v${Phash64KernelVer}_retract_$salt",
-        "phash/_SUCCESS") { tmp =>
-        maintained(s, d)
-          .join(tombs.select(col("id")).distinct(), Seq("id"), "left_anti")
-          .publishTo(s"$tmp/phash")
-      }
   }
 
   /** The DuckDB pHash derivation (b → samp → cells → lvl → ph) — the
@@ -1399,7 +1346,7 @@ object Multimodal {
     "mm07_media_ring_lifecycle",
     (s, d) => {
       val grown = MediaIndex.maintained(s, d)
-      val retracted = s.read.parquet(
+      val retracted = IndexStore.readPublished(s,
         s"${MediaIndex.ensureRetracted(s, d, "mm07",
           grown.filter(col("id") % 13 === 4))}/phash")
       def verdict(state: DataFrame, stage: String) =
@@ -1699,7 +1646,7 @@ object Multimodal {
     "mm13_wide_ring_lifecycle",
     (s, d) => {
       val grown = WideMediaIndex.maintained(s, d)
-      val retracted = s.read.parquet(
+      val retracted = IndexStore.readPublished(s,
         s"${WideMediaIndex.ensureRetracted(s, d, "mm13",
           grown.filter(col("id") % 13 === 4))}/phash")
       def verdict(state: DataFrame, stage: String) =

@@ -271,11 +271,9 @@ object SourcesStreaming {
   /** Published serving dirs for the maintenance rewrites (r06/r07/r11)
     * — corpus-fingerprinted and rename-atomic via [[IndexStore.ensure]],
     * the same contract as the persisted indexes: a crashed rewrite
-    * leaves only a `.build-*` sibling and the previous complete copy
-    * keeps serving; a regenerated corpus flips the fingerprint and
-    * forces a rebuild. Before r14 these rewrites `overwrite`d the
-    * serving path in place — safe within one JVM, but a crash mid-write
-    * at deployment would have left a torn table (the r13 VERDICT nit). */
+    * leaves the previous complete copy serving (never a torn table, as
+    * an in-place `overwrite` of the serving path would); a regenerated
+    * corpus flips the fingerprint and forces a rebuild. */
   /** Layout-version salt for the rewrite dirs: the corpus fingerprint
     * catches DATA staleness but not CODE staleness — a changed
     * targetBytesPerFile / range partitioning / z-interleave served from
@@ -284,11 +282,11 @@ object SourcesStreaming {
     * rewrite's output layout changes. */
   private val RewriteLayoutV = "l1"
   private[operators] def compactDir(d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_compact_${RewriteLayoutV}_${IndexStore.corpusFingerprint(d, "lineitem")}"
+    IndexStore.dir(s"compact_$RewriteLayoutV", d, "lineitem")
   private[operators] def clusterDir(d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_cluster_${RewriteLayoutV}_${IndexStore.corpusFingerprint(d, "events")}"
+    IndexStore.dir(s"cluster_$RewriteLayoutV", d, "events")
   private[operators] def zorderDir(d: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_zorder_${RewriteLayoutV}_${IndexStore.corpusFingerprint(d, "events")}"
+    IndexStore.dir(s"zorder_$RewriteLayoutV", d, "events")
 
   val r06 = QueryDef(
     "r06_compaction",
@@ -335,7 +333,7 @@ object SourcesStreaming {
         w.read.parquet(frag).coalesce(nOut)
           .write.mode("overwrite").parquet(s"$tmp/data")
       }
-      s.read.parquet(s"$dir/data")
+      IndexStore.readPublished(s, s"$dir/data")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n"),
           graft.functions.Exact.exactSum(col("l_extendedprice")).as("sum_price"))
@@ -371,7 +369,7 @@ object SourcesStreaming {
           .repartitionByRange(8, col("ts")).sortWithinPartitions("ts")
           .write.mode("overwrite").parquet(s"$tmp/data")
       }
-      s.read.parquet(s"$dir/data")
+      IndexStore.readPublished(s, s"$dir/data")
         .filter(col("ts") >= lit(java.sql.Timestamp.valueOf("2024-01-15 00:00:00")) &&
           col("ts") < lit(java.sql.Timestamp.valueOf("2024-01-16 00:00:00")))
         .groupBy(col("event_type"))
@@ -545,7 +543,7 @@ object SourcesStreaming {
           .drop("zv")
           .write.mode("overwrite").parquet(s"$tmp/data")
       }
-      s.read.parquet(s"$dir/data")
+      IndexStore.readPublished(s, s"$dir/data")
         .filter(col("user_id") < 5 &&
           col("ts") >= lit(java.sql.Timestamp.valueOf("2024-01-10 00:00:00")) &&
           col("ts") < lit(java.sql.Timestamp.valueOf("2024-01-20 00:00:00")))
@@ -1122,7 +1120,7 @@ object SourcesStreaming {
     import graft.operators.Similarity.IvfIncIndex
     graft.functions.VectorExpressions.register(s2)
     val bd = IvfIncIndex.ensureBase(s2, d)
-    val cen = s2.read.parquet(s"$bd/centroids")
+    val cen = IndexStore.readPublished(s2, s"$bd/centroids")
       .select(col("cell"), col("center")).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1)))
       .sortBy(_._1) // cell order = the struct-array tiebreak order

@@ -490,7 +490,7 @@ object TextDedup {
     * instead of re-profiling the corpus. */
   object HotShingleProfile {
     private[operators] def indexDirFor(d: String, hotDf: Int): String =
-      s"${sys.props("java.io.tmpdir")}/graft_hotsh_l1_${IndexStore.corpusFingerprint(d, "documents")}_df$hotDf"
+      IndexStore.dir("hotsh_l1", d, "documents", s"_df$hotDf")
 
     /** Persist BOTH stats artifacts from ONE df aggregate: `hot`
       * (df >= hotDf, the skew-hatch routing set) and `matchable`
@@ -507,13 +507,14 @@ object TextDedup {
           .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
           .localCheckpoint() // one aggregate feeds both artifacts
         // hot keeps its df: [[blocksFor]] sizes the salting from the
-        // profiled max (the r14 adaptive-blocks change; layout salt l1)
+        // profiled max (adaptive blocks; layout salt l1)
         df.filter(col("df") >= hotDf).select(col("shingle"), col("df"))
           .publishTo(s"$tmp/hot")
         df.filter(col("df") >= 2).select(col("shingle"))
           .publishTo(s"$tmp/matchable")
       }
-      (s.read.parquet(s"$dir/hot"), s.read.parquet(s"$dir/matchable"))
+      (IndexStore.readPublished(s, s"$dir/hot"),
+        IndexStore.readPublished(s, s"$dir/matchable"))
     }
 
   }
@@ -669,23 +670,18 @@ object TextDedup {
     * re-runs the tokenize+shingle+minhash kernel over the RESIDENT
     * corpus. Publication/staleness contract: [[IndexStore]]. */
   object BandIndex {
-    // _l1: layout-version salt (the SourcesStreaming.RewriteLayoutV
-    // convention) — a banding change (NumHashes/BandRows/kernel seed)
-    // must not be served from a warm pre-change publication
+    // _l1: layout-version salt — a banding change (NumHashes/BandRows/
+    // kernel seed) must not be served from a warm pre-change publication
     private[graft] def indexDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_bands_l1_${IndexStore.corpusFingerprint(d, "documents")}"
+      IndexStore.dir("bands_l1", d, "documents")
 
-    def ensure(s: SparkSession, d: String): DataFrame = {
-      val dir = IndexStore.ensure(indexDirFor(d), "bands/_SUCCESS") { tmp =>
-        bandsFrame(s, d).publishTo(s"$tmp/bands")
-      }
-      s.read.parquet(s"$dir/bands")
-    }
+    def ensure(s: SparkSession, d: String): DataFrame =
+      IndexStore.published(s, indexDirFor(d), "bands")(bandsFrame(s, d))
   }
 
   /** Above this documents.parquet size the band signatures come from the
     * persisted [[BandIndex]]; below it they are recomputed inline. The
-    * inline kernel wins at gate scale (the r8 posting-list negative
+    * inline kernel wins at gate scale (the posting-list negative
     * result: a parquet round-trip of a derivation costs more than the
     * fused scan it replaces when the corpus is small), but the kernel
     * pass is CPU-∝-corpus while the persisted read is IO-∝-signatures —
@@ -693,23 +689,16 @@ object TextDedup {
     * (PLANS.md SIG table), and at 100 TB it is a nightly full-corpus
     * pass a deployment cannot afford. 4 MiB keeps every gate SF inline
     * (sf0.1 documents = 584 KiB) and flips the deep /tmp corpora. */
-  private[operators] val BandsPersistBytes = 4L * 1024 * 1024
+  private[graft] val BandsPersistBytes = 4L * 1024 * 1024
 
   /** The corpus band signatures, from the persisted [[BandIndex]] or the
-    * inline kernel per the size gate above; `spark.graft.bands.mode`
-    * (`auto`/`persisted`/`inline`) overrides for measurement. Both paths
-    * are bit-identical by construction (the index IS the kernel's
-    * output, fixed seed, no trained state) — pinned in
-    * PairIndexDeltaSpec. */
+    * inline kernel per the size gate above. Both paths are bit-identical
+    * by construction (the index IS the kernel's output, fixed seed, no
+    * trained state) — pinned row for row in PairIndexDeltaSpec. */
   private[graft] def corpusBands(s: SparkSession, d: String): DataFrame =
-    s.conf.get("spark.graft.bands.mode", "auto") match {
-      case "persisted" => BandIndex.ensure(s, d)
-      case "inline"    => bandsFrame(s, d)
-      case _ =>
-        if (IndexStore.corpusBytes(d, "documents") > BandsPersistBytes)
-          BandIndex.ensure(s, d)
-        else bandsFrame(s, d)
-    }
+    if (IndexStore.corpusBytes(d, "documents") > BandsPersistBytes)
+      BandIndex.ensure(s, d)
+    else bandsFrame(s, d)
 
   /** Band self-join candidate pairs → exact verification, over an
     * explicit band frame — the ONE pairing body shared by the full build
@@ -834,24 +823,19 @@ object TextDedup {
     * and read by every consumer. The pair set is THE expensive dedup
     * artifact at 100 TB; before this index the catalog ran the full LSH
     * pipeline three times per pass (t07 itself, t11's edge stream at
-    * Corpus' connected components, t19's leakage audit — the round-7
-    * `weak` finding). Deterministic: candidates are exactly verified, so
-    * the persisted rows equal the exact inverted-index result
-    * regardless of build timing. Publication/staleness contract:
-    * [[IndexStore]]. */
+    * Corpus' connected components, t19's leakage audit).
+    * Deterministic: candidates are exactly verified, so the persisted
+    * rows equal the exact inverted-index result regardless of build
+    * timing. Publication/staleness contract: [[IndexStore]]. */
   object PairIndex {
     private[graft] def indexDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_pairs_${IndexStore.corpusFingerprint(d, "documents")}"
+      IndexStore.dir("pairs", d, "documents")
 
     /** The pair frame for corpus `d`, building + publishing first if
       * this corpus fingerprint has no index yet. Unordered — consumers
       * impose their own order. */
-    def ensure(s: SparkSession, d: String): DataFrame = {
-      val dir = IndexStore.ensure(indexDirFor(d), "pairs/_SUCCESS") { tmp =>
-        lshPairs(s, d).publishTo(s"$tmp/pairs")
-      }
-      s.read.parquet(s"$dir/pairs")
-    }
+    def ensure(s: SparkSession, d: String): DataFrame =
+      IndexStore.published(s, indexDirFor(d), "pairs")(lshPairs(s, d))
   }
 
   /** NEGATIVE RESULT (r8, measured): a [[PairIndex]]-style persisted
@@ -937,13 +921,8 @@ object TextDedup {
     * is once per state — pass a new dir per night, the
     * [[PromotedPairIndex]] convention). Returns the PUBLISHED frame (a
     * parquet read), which is what the next night must build on. */
-  def publishPairs(pairs: DataFrame, dir: String): DataFrame = {
-    val s = pairs.sparkSession
-    IndexStore.ensure(dir, "pairs/_SUCCESS") { tmp =>
-      pairs.publishTo(s"$tmp/pairs")
-    }
-    s.read.parquet(s"$dir/pairs")
-  }
+  def publishPairs(pairs: DataFrame, dir: String): DataFrame =
+    IndexStore.published(pairs.sparkSession, dir, "pairs")(pairs)
 
   /** Library façade: RETRACT documents from a published pair state —
     * the DELETE arm of the maintenance ring (takedowns, opt-outs, TTL
@@ -1799,17 +1778,14 @@ object TextDedup {
     * the full rebuild. Same [[IndexStore]] contract as [[PairIndex]]. */
   object ResidentPairIndex {
     private[graft] def indexDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_pairs_res_l1_${IndexStore.corpusFingerprint(d, "documents")}"
+      IndexStore.dir("pairs_res_l1", d, "documents")
 
-    def ensure(s: SparkSession, d: String): DataFrame = {
-      val dir = IndexStore.ensure(indexDirFor(d), "pairs/_SUCCESS") { tmp =>
+    def ensure(s: SparkSession, d: String): DataFrame =
+      IndexStore.published(s, indexDirFor(d), "pairs") {
         lshPairsFromBands(docs(s, d),
-            corpusBands(s, d).filter(col("doc_id") % 10 =!= 7),
-            setsBytesFor(d))
-          .publishTo(s"$tmp/pairs")
+          corpusBands(s, d).filter(col("doc_id") % 10 =!= 7),
+          setsBytesFor(d))
       }
-      s.read.parquet(s"$dir/pairs")
-    }
   }
 
   /** The [[pairDelta]] product PERSISTED once per corpus fingerprint —
@@ -1817,28 +1793,22 @@ object TextDedup {
     * the delta COMPUTATION (and stays live, it is the gate for exactly
     * that), the delta's consumers read its written product. t35's
     * incremental clustering consumes this instead of re-running the
-    * band probe per pass (r16 VERDICT slate #2a: the gate's live cost
-    * becomes the splice + bounded CC). Same [[IndexStore]] contract as
-    * every index. */
+    * band probe per pass (the gate's live cost becomes the splice +
+    * bounded CC). Same [[IndexStore]] contract as every index. */
   object DeltaPairIndex {
     private[graft] def indexDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_pairs_dlt_l1_${IndexStore.corpusFingerprint(d, "documents")}"
+      IndexStore.dir("pairs_dlt_l1", d, "documents")
 
-    def ensure(s: SparkSession, d: String): DataFrame = {
-      val dir = IndexStore.ensure(indexDirFor(d), "pairs/_SUCCESS") { tmp =>
-        pairDelta(s, d).publishTo(s"$tmp/pairs")
-      }
-      s.read.parquet(s"$dir/pairs")
-    }
+    def ensure(s: SparkSession, d: String): DataFrame =
+      IndexStore.published(s, indexDirFor(d), "pairs")(pairDelta(s, d))
   }
 
   /** The segment-tail fold RATIO POLICY shared by the promotion ring
     * ([[PromotedPairIndex]]) and the soak ring ([[SoakRing]]) — one
     * calculus (the [[Similarity.IvfIncIndex.CompactRatio]] constant,
     * shared with the vector ring) so the two pair rings cannot drift
-    * policies (r17 review finding). Degraded listings (-1) are never
-    * due — folding is an optimization; the segment union is always
-    * correct. */
+    * policies. Degraded listings (-1) are never due — folding is an
+    * optimization; the segment union is always correct. */
   private def pairFoldDue(baseDir: String, tailDirs: Seq[String]): Boolean = {
     val bb = IndexStore.dirBytes(baseDir)
     val tail = tailDirs.map(IndexStore.dirBytes)
@@ -1846,19 +1816,29 @@ object TextDedup {
       tail.sum.toDouble >= Similarity.IvfIncIndex.CompactRatio * bb
   }
 
-  /** The folded WRITE shared by both rings' fold step. File sizing is
-    * publishTo's REBALANCE (count tracks bytes via
-    * advisoryPartitionSizeInBytes) — an explicit repartition(nFiles)
-    * here was DEAD CODE, removed by Catalyst's CollapseRepartition
-    * under the rebalance hint (r21 ADVICE), so it is gone rather than
-    * kept as a sizing that never applied. */
-  private def writeFoldedPairs(union: DataFrame, tmp: String): Unit =
-    union.publishTo(tmp)
+  /** One night SEGMENT of a pair ring, published once at `dir`: with no
+    * `arriving` slice, the from-scratch LSH build over the docs
+    * `present` that night; with slice `doc_id % 10 == arriving`, that
+    * slice's band delta against them ([[bandDelta]] — cost ∝ the slice,
+    * never ∝ the corpus). ONE body for the promotion ring and the soak
+    * ring, so the two cannot drift on how a night is built. */
+  private def nightSegment(s: SparkSession, d: String, dir: String,
+      present: Column, arriving: Option[Int]): DataFrame =
+    IndexStore.published(s, dir, "pairs") {
+      val src = docs(s, d).filter(present)
+      val bands = corpusBands(s, d).filter(present)
+      arriving match {
+        case None => lshPairsFromBands(src, bands, setsBytesFor(d))
+        case Some(rem) =>
+          bandDelta(src, bands, bands.filter(col("doc_id") % 10 === rem),
+            setsBytesFor(d), avgDocBytesFor(d))
+      }
+    }
 
   /** N-night PROMOTION ring over the persisted pair index — the piece
-    * that closes the maintenance LOOP (r14 VERDICT slate #1): c04
-    * computes resident ∪ delta but never writes it back, so every night
-    * would start from the same resident. Here each night ENDS by
+    * that closes the maintenance LOOP: c04 computes resident ∪ delta
+    * but never writes it back, so every night would start from the
+    * same resident. Here each night ENDS by
     * atomically publishing the grown pair set as the next resident
     * state, and night k+1 STARTS from night k's output:
     *
@@ -1896,34 +1876,19 @@ object TextDedup {
       SliceRems.drop(night).foldLeft(lit(true))(
         (acc, r) => acc && col("doc_id") % 10 =!= r)
 
-    // _l2: layout-version salt bump — a night's dir used to hold the
-    // FULL promoted state; it now holds only that night's SEGMENT (the
-    // IVF delta-segment model applied to the text ring), and a warm l1
-    // dir must not be served under the new meaning
+    // _l2: layout-version salt — a night's dir holds only that night's
+    // SEGMENT (the IVF delta-segment model applied to the text ring),
+    // never the full promoted state the l1 layout held
     private[graft] def stateDirFor(d: String, night: Int): String =
-      s"${sys.props("java.io.tmpdir")}/graft_pairs_ring_l2_${IndexStore.corpusFingerprint(d, "documents")}_n$night"
+      IndexStore.dir("pairs_ring_l2", d, "documents", s"_n$night")
 
-    /** Night 0's build body without the publication write. */
-    private[graft] def night0Plan(s: SparkSession, d: String): DataFrame =
-      lshPairsFromBands(docs(s, d).filter(presentAt(0)),
-        corpusBands(s, d).filter(presentAt(0)), setsBytesFor(d))
-
-    /** Publish night `night`'s SEGMENT if missing: night 0 is the
-      * from-scratch resident build, night k the slice-k band delta —
-      * each an immutable publish-once dir whose write cost is ∝ its own
+    /** Night `night`'s published SEGMENT: night 0 is the from-scratch
+      * resident build, night k the slice-k band delta — each an
+      * immutable publish-once dir whose write cost is ∝ its own
       * content. */
-    private def ensureSegment(s: SparkSession, d: String, night: Int): String =
-      IndexStore.ensure(stateDirFor(d, night), "pairs/_SUCCESS") { tmp =>
-        val seg =
-          if (night == 0) night0Plan(s, d)
-          else {
-            val bands = corpusBands(s, d).filter(presentAt(night))
-            bandDelta(docs(s, d).filter(presentAt(night)),
-              bands, bands.filter(col("doc_id") % 10 === SliceRems(night - 1)),
-              setsBytesFor(d), avgDocBytesFor(d))
-          }
-        seg.publishTo(s"$tmp/pairs")
-      }
+    private def ensureSegment(s: SparkSession, d: String, night: Int): DataFrame =
+      nightSegment(s, d, stateDirFor(d, night), presentAt(night),
+        if (night == 0) None else Some(SliceRems(night - 1)))
 
     /** The promoted pair-index state after `night` nights — the union
       * of the published segments 0..night, building any missing one
@@ -1940,17 +1905,16 @@ object TextDedup {
     def ensure(s: SparkSession, d: String, night: Int): DataFrame = {
       require(night >= 0 && night <= SliceRems.size,
         s"ring has ${SliceRems.size} nights; got $night")
-      (0 to night).map(k => s.read.parquet(s"${ensureSegment(s, d, k)}/pairs"))
-        .reduce(_ unionByName _)
+      (0 to night).map(ensureSegment(s, d, _)).reduce(_ unionByName _)
     }
 
     // ------------------------------------------------- segment-tail fold
     //
     // Segmented promotion bounds the WRITE (a night publishes only its
     // delta segment) but re-opens the READ tail the IVF side already
-    // closed (r15 VERDICT slate #1): after a year of nights a reader
-    // unions ~365 pair segments unless an operator remembers to call
-    // publishPairs by hand. The fold below is IvfIncIndex's LSM rebase
+    // closed: after a year of nights a reader unions ~365 pair
+    // segments unless an operator remembers to call publishPairs by
+    // hand. The fold below is IvfIncIndex's LSM rebase
     // applied to the pair ring — the SAME ratio calculus decides WHEN
     // (delta-tail bytes ≥ CompactRatio × resident segment), the fold
     // rewrites the union as ONE size-targeted segment, publication is
@@ -1961,7 +1925,7 @@ object TextDedup {
     // restricted to the final night) and CompactionSpec pins directly.
 
     private[graft] def foldedDirFor(d: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_pairs_ring_f1_${IndexStore.corpusFingerprint(d, "documents")}"
+      IndexStore.dir("pairs_ring_f1", d, "documents")
 
     /** The ratio policy, shared constant with the vector ring
       * ([[Similarity.IvfIncIndex.CompactRatio]]): fold when the delta
@@ -1976,34 +1940,33 @@ object TextDedup {
     /** Fold the whole segment tail into ONE published resident segment —
       * cost ∝ pair-set bytes (the compressed artifact, never
       * corpus-sized), a scheduled job at scale. Output file count is
-      * size-targeted (~128 MB) and floored at the parallelism, the
-      * [[Similarity.IvfIncIndex.ensureCompacted]] convention, so a year
-      * of small nightly files collapses without costing the probe its
-      * scan splits. */
+      * size-targeted by publishTo's REBALANCE (the
+      * [[Similarity.IvfIncIndex.ensureCompacted]] convention), so a
+      * year of small nightly files collapses without costing the probe
+      * its scan splits. */
     def ensureFolded(s: SparkSession, d: String): String =
-      IndexStore.ensure(foldedDirFor(d), "pairs/_SUCCESS") { tmp =>
-        writeFoldedPairs(ensure(s, d, SliceRems.size), s"$tmp/pairs")
-      }
+      IndexStore.ensurePublished(foldedDirFor(d), "pairs")(
+        ensure(s, d, SliceRems.size))
 
     /** The maintained reader view of the ring's final state: the folded
       * single segment once the ratio policy says the rebase has paid for
       * itself, the segment union otherwise. Segments are ensured BEFORE
-      * the policy reads their sizes (the r15 call-order finding — a cold
-      * corpus would otherwise never fold in a one-shot job). Both arms
-      * are row-identical by construction; c06 gates the served arm
-      * against the from-scratch oracle, CompactionSpec pins arm
-      * equality and the policy edges directly. */
+      * the policy reads their sizes (a cold corpus would otherwise never
+      * fold in a one-shot job). Both arms are row-identical by
+      * construction; c06 gates the served arm against the from-scratch
+      * oracle, CompactionSpec pins arm equality and the policy edges
+      * directly. */
     def maintained(s: SparkSession, d: String): DataFrame = {
       val segmented = ensure(s, d, SliceRems.size)
-      if (foldDue(d)) s.read.parquet(s"${ensureFolded(s, d)}/pairs")
+      if (foldDue(d)) IndexStore.readPublished(s, s"${ensureFolded(s, d)}/pairs")
       else segmented
     }
   }
 
-  /** The multi-night SOAK ring (r16 VERDICT slate #1) — every lifecycle
-    * arm is individually hash-gated (c04 grow, c05 promote, c06 fold,
-    * c07 retract), but none of those can see state corruption that only
-    * appears after CHAINED maintenance: promote → fold → retract →
+  /** The multi-night SOAK ring — every lifecycle arm is individually
+    * hash-gated (c04 grow, c05 promote, c06 fold, c07 retract), but none
+    * of those can see state corruption that only appears after CHAINED
+    * maintenance: promote → fold → retract →
     * promote over one corpus, each night building on the previous
     * night's PUBLISHED artifact. This ring simulates five nights:
     *
@@ -2040,7 +2003,7 @@ object TextDedup {
     * retraction are ∝ pair-set bytes; publication is the atomic
     * rename+marker every index rides ([[IndexStore]]). The N-night
     * cost curve is measured at 125k docs in ScaleSmoke `soak`
-    * (PLANS.md r17). Reference anchor: the daily cron shape,
+    * (PLANS.md). Reference anchor: the daily cron shape,
     * `README.md:9`, `tabjolt_email.py:345-394`. */
   object SoakRing {
     /** Grow slices in arrival order (nights 1..2). */
@@ -2095,29 +2058,17 @@ object TextDedup {
       case 4 => s"$c % 10 = $LateRem AND $c % $TombMod <> $TombRem"
     }
 
-    // _l1: layout-version salt, the BandIndex convention
+    // _l1: layout-version salt
     private def dirFor(d: String, tag: String): String =
-      s"${sys.props("java.io.tmpdir")}/graft_soak_l1_${IndexStore.corpusFingerprint(d, "documents")}_$tag"
+      IndexStore.dir("soak_l1", d, "documents", s"_$tag")
 
     /** Night 0's build / nights 1-2's delta segments — publish-once. */
-    private def ensureSegment(s: SparkSession, d: String, night: Int): String =
-      IndexStore.ensure(dirFor(d, s"n$night"), "pairs/_SUCCESS") { tmp =>
-        val seg =
-          if (night == 0)
-            lshPairsFromBands(docs(s, d).filter(presentAt(0)),
-              corpusBands(s, d).filter(presentAt(0)), setsBytesFor(d))
-          else {
-            val bands = corpusBands(s, d).filter(presentAt(night))
-            bandDelta(docs(s, d).filter(presentAt(night)), bands,
-              bands.filter(col("doc_id") % 10 === GrowRems(night - 1)),
-              setsBytesFor(d), avgDocBytesFor(d))
-          }
-        seg.publishTo(s"$tmp/pairs")
-      }
+    private def ensureSegment(s: SparkSession, d: String, night: Int): DataFrame =
+      nightSegment(s, d, dirFor(d, s"n$night"), presentAt(night),
+        if (night == 0) None else Some(GrowRems(night - 1)))
 
     private def segUnion(s: SparkSession, d: String, night: Int): DataFrame =
-      (0 to night).map(k => s.read.parquet(s"${ensureSegment(s, d, k)}/pairs"))
-        .reduce(_ unionByName _)
+      (0 to night).map(ensureSegment(s, d, _)).reduce(_ unionByName _)
 
     /** Night 2's fold policy — the ONE [[pairFoldDue]] calculus over
       * the soak's own segment dirs (shared body with the promotion
@@ -2126,33 +2077,25 @@ object TextDedup {
       pairFoldDue(s"${dirFor(d, "n0")}/pairs",
         (1 to GrowRems.size).map(k => s"${dirFor(d, s"n$k")}/pairs"))
 
-    private def ensureFolded(s: SparkSession, d: String): String =
-      IndexStore.ensure(dirFor(d, "fold2"), "pairs/_SUCCESS") { tmp =>
-        writeFoldedPairs(segUnion(s, d, GrowRems.size), s"$tmp/pairs")
-      }
+    private def ensureFolded(s: SparkSession, d: String): DataFrame =
+      IndexStore.published(s, dirFor(d, "fold2"), "pairs")(
+        segUnion(s, d, GrowRems.size))
 
     /** Night 3: tombstones retracted from night 2's SERVED layout
       * (folded or segmented — row-identical either way) and the reduced
       * state published as the new resident. */
-    private def ensureRetracted(s: SparkSession, d: String): String =
-      IndexStore.ensure(dirFor(d, "n3"), "pairs/_SUCCESS") { tmp =>
+    private def ensureRetracted(s: SparkSession, d: String): DataFrame =
+      IndexStore.published(s, dirFor(d, "n3"), "pairs") {
         val tombs = docs(s, d)
           .filter(col("doc_id") % TombMod === TombRem).select(col("doc_id"))
         retractPairs(served(s, d, 2), tombs)
-          .publishTo(s"$tmp/pairs")
       }
 
     /** Night 4: the late slice grows the POST-RETRACTION state — fresh
       * bands exclude tombstoned members via presentAt(4), so a
       * retracted doc's pairs can never be resurrected by the grow. */
-    private def ensureLateSegment(s: SparkSession, d: String): String =
-      IndexStore.ensure(dirFor(d, "n4"), "pairs/_SUCCESS") { tmp =>
-        val bands = corpusBands(s, d).filter(presentAt(4))
-        bandDelta(docs(s, d).filter(presentAt(4)), bands,
-          bands.filter(col("doc_id") % 10 === LateRem),
-          setsBytesFor(d), avgDocBytesFor(d))
-          .publishTo(s"$tmp/pairs")
-      }
+    private def ensureLateSegment(s: SparkSession, d: String): DataFrame =
+      nightSegment(s, d, dirFor(d, "n4"), presentAt(4), Some(LateRem))
 
     /** Delete every publication of this ring for corpus `d` —
       * measurement harness only (ScaleSmoke `soak` re-times cold
@@ -2168,11 +2111,9 @@ object TextDedup {
       case n if n >= 0 && n <= 1 => segUnion(s, d, n)
       case 2 =>
         val segmented = segUnion(s, d, 2)
-        if (foldDue(d)) s.read.parquet(s"${ensureFolded(s, d)}/pairs")
-        else segmented
-      case 3 => s.read.parquet(s"${ensureRetracted(s, d)}/pairs")
-      case 4 => s.read.parquet(s"${ensureRetracted(s, d)}/pairs")
-        .unionByName(s.read.parquet(s"${ensureLateSegment(s, d)}/pairs"))
+        if (foldDue(d)) ensureFolded(s, d) else segmented
+      case 3 => ensureRetracted(s, d)
+      case 4 => ensureRetracted(s, d).unionByName(ensureLateSegment(s, d))
       case n => sys.error(s"soak ring has 5 nights (0-4); got $n")
     }
   }

@@ -67,6 +67,18 @@ object ScaleSmoke {
       dir
     }
 
+    /** `ring` and `soak` measure the deployment shape, where the band
+      * signatures come from the persisted BandIndex: the size gate
+      * (`TextDedup.corpusBands`) picks that arm only above
+      * `BandsPersistBytes`, so fail loudly on a corpus below it. */
+    def requirePersistedBands(dir: String): Unit = {
+      val bytes = graft.operators.IndexStore.corpusBytes(dir, "documents")
+      require(bytes > graft.operators.TextDedup.BandsPersistBytes,
+        s"$dir/documents.parquet is $bytes bytes, not above " +
+          s"BandsPersistBytes (${graft.operators.TextDedup.BandsPersistBytes}): " +
+          "the size gate would recompute bands inline")
+    }
+
     /** [[writeDocsReplicas]] only if absent, so sections can run
       * standalone without repeating growth's writes. */
     def ensureDocsReplicas(k: Int): String = {
@@ -126,7 +138,7 @@ object ScaleSmoke {
           TextDedup.ResidentPairIndex.indexDirFor(dir),
           TextDedup.BandIndex.indexDirFor(dir))
         .foreach(p => graft.Lifecycle.deleteRecursively(new java.io.File(p)))
-      spark.conf.set("spark.graft.bands.mode", "persisted")
+      requirePersistedBands(dir)
       val (tSig, _) = time(TextDedup.BandIndex.ensure(spark, dir).count())
       val (tFull, nFull) = time(TextDedup.PairIndex.ensure(spark, dir).count())
       val (tRes, nRes) = time(TextDedup.ResidentPairIndex.ensure(spark, dir).count())
@@ -140,7 +152,6 @@ object ScaleSmoke {
       val grown = TextDedup.ResidentPairIndex.ensure(spark, dir)
         .unionByName(spark.read.parquet(deltaOut))
       val (tProbe, nProbe) = time(TextDedup.probeKeep(spark, dir, grown).count())
-      spark.conf.set("spark.graft.bands.mode", "auto")
       println(f"RING docs=${n0 * k}%7d onceOnly: sig=${tSig}%5.1fs " +
         f"resident=${tRes}%5.1fs ($nRes pairs) | " +
         f"nightly: delta=${tDelta}%5.1fs ($nDelta pairs) probe=${tProbe}%5.1fs " +
@@ -157,7 +168,7 @@ object ScaleSmoke {
     if (want("soak")) {
       import graft.operators.TextDedup.SoakRing
       val dir = ensureDocsReplicas(25)
-      spark.conf.set("spark.graft.bands.mode", "persisted")
+      requirePersistedBands(dir)
       graft.operators.TextDedup.BandIndex.ensure(spark, dir) // warm, untimed
       graft.Lifecycle.release(spark)
       SoakRing.wipe(dir)
@@ -167,9 +178,6 @@ object ScaleSmoke {
       }
       println(s"SOAK docs=125k nights: ${curve.mkString(" ")} " +
         s"foldDue=${SoakRing.foldDue(dir)}")
-      // restore the session default so later sections in the same
-      // invocation measure under it
-      spark.conf.set("spark.graft.bands.mode", "auto")
     }
 
     // ---- giant-dup-cluster adversary (r16 VERDICT slate #3) ----

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions.lit
 /** The publication/staleness contract shared by every persisted index
   * (IVF centroids, LSH signatures, near-dup pairs). Rebuild-on-corpus-
   * regeneration is pinned per index in OperatorsSpec; this spec pins
-  * the store machinery itself: reuse, torn-build recovery, the
-  * racing-builder convergence path, and the pinned-schema read. */
+  * the store machinery itself: reuse, torn-build recovery, failed-build
+  * cleanup, the racing-builder convergence path, and the pinned-schema
+  * read. */
 class IndexStoreSpec extends SparkSpec {
 
   private def write(f: java.io.File, s: String): Unit = {
@@ -36,6 +37,31 @@ class IndexStoreSpec extends SparkSpec {
     IndexStore.ensure(dir.getAbsolutePath, "data/_SUCCESS")(build)
     assert(builds == 2 && new java.io.File(dir, "data/_SUCCESS").exists())
     assert(leftovers(parent).isEmpty, "build scratch dirs must not leak")
+    // the same reuse through published: a warm dir never evaluates the
+    // by-name build
+    var frames = 0
+    def rows() = IndexStore.published(spark,
+        new java.io.File(parent, "index1p").getAbsolutePath, "rows") {
+      frames += 1
+      spark.range(2).toDF("id")
+    }
+    assert(rows().count() == 2 && frames == 1)
+    assert(rows().count() == 2 && frames == 1,
+      "a warm dir must be served without running the build")
+  }
+
+  test("a build that throws leaves neither a scratch sibling nor the target dir") {
+    val parent = java.nio.file.Files.createTempDirectory("idxstore").toFile
+    val dir = new java.io.File(parent, "index3")
+    val e = intercept[IllegalStateException] {
+      IndexStore.ensure(dir.getAbsolutePath, "data/_SUCCESS") { tmp =>
+        write(new java.io.File(tmp, "data/part-0"), "half-written")
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(e.getMessage == "build failed", "the build's exception must propagate")
+    assert(leftovers(parent).isEmpty, "a failed build must delete its scratch dir")
+    assert(!dir.exists(), "a failed build must not publish a target dir")
   }
 
   test("racing builders converge on the first published index") {
@@ -54,16 +80,13 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("readPublished pins a dir's schema until the dir is deleted") {
-    import IndexStore.PublishSyntax
     val dir = new java.io.File(
       java.nio.file.Files.createTempDirectory("idxstore").toFile, "pub").getAbsolutePath
     val rows = s"$dir/rows"
-    def publish(df: org.apache.spark.sql.DataFrame): Unit = {
-      IndexStore.ensure(dir, "rows/_SUCCESS")(tmp => df.publishTo(s"$tmp/rows")); ()
-    }
+    def publish(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      IndexStore.published(spark, dir, "rows")(df).columns.toSeq
     def columns: Seq[String] = IndexStore.readPublished(spark, rows).columns.toSeq
-    publish(spark.range(3).toDF("id"))
-    assert(columns == Seq("id"))
+    assert(publish(spark.range(3).toDF("id")) == Seq("id"))
     // the pin is live: rewriting the files in place behind the store's
     // back (a publish-once violation) keeps serving the pinned schema
     spark.range(3).toDF("id").withColumn("extra", lit(1))
@@ -72,7 +95,8 @@ class IndexStoreSpec extends SparkSpec {
     // a delete through Lifecycle drops the pin, so the republished
     // layout is read with its own schema
     graft.Lifecycle.deleteRecursively(new java.io.File(dir))
-    publish(spark.range(3).toDF("id").withColumn("extra", lit(7)))
+    assert(publish(spark.range(3).toDF("id").withColumn("extra", lit(7))) ==
+      Seq("id", "extra"))
     assert(columns == Seq("id", "extra"))
     assert(IndexStore.readPublished(spark, rows).select("extra").distinct()
       .collect().map(_.getInt(0)).toSeq == Seq(7))
